@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Det
+import graft.core.{Det, Tables}
 
 /** Scaling probe: replicate the sf0.1 fact tables k× (keys shifted so
   * cardinalities scale too) and time the three canonical plan shapes —
@@ -63,9 +63,9 @@ object ScaleProbe {
       return
     }
     val sf = "/root/testdata/sf0.1"
-    val li0 = spark.read.parquet(s"$sf/lineitem.parquet")
+    val li0 = Tables.load(spark, sf, "lineitem")
       .select("l_orderkey", "l_extendedprice", "l_discount", "l_returnflag", "l_quantity")
-    val o0 = spark.read.parquet(s"$sf/orders.parquet")
+    val o0 = Tables.load(spark, sf, "orders")
       .select("o_orderkey", "o_custkey")
     val maxKey = li0.agg(max("l_orderkey")).collect()(0).getLong(0) + 1
 
@@ -117,10 +117,10 @@ object ScaleProbe {
 
     // ---- dedup/ANN growth probes: candidate volume must stay BOUNDED
     // (≈linear in corpus size), or the scale story of e02/t05 is a lie.
-    val emb0 = spark.read.parquet(s"$sf/embeddings.parquet")
+    val emb0 = Tables.load(spark, sf, "embeddings")
       .select("vec_id", "embedding")
     val maxVec = emb0.agg(max("vec_id")).collect()(0).getLong(0) + 1
-    val doc0 = spark.read.parquet(s"$sf/documents.parquet")
+    val doc0 = Tables.load(spark, sf, "documents")
       .select("doc_id", "text")
     val maxDoc = doc0.agg(max("doc_id")).collect()(0).getLong(0) + 1
     val qCol = expr(
@@ -396,9 +396,9 @@ object ScaleProbe {
     // t19 decontamination (bloom build + exact join) and t25 pack
     // pipeline, timed against k x the fact parquet (dims copied).
     // Near-linear seconds in k is the claim each plan shape makes.
-    val docAll = spark.read.parquet(s"$sf/documents.parquet")
+    val docAll = Tables.load(spark, sf, "documents")
     val maxDocAll = docAll.agg(max("doc_id")).collect()(0).getLong(0) + 1
-    val ordAll = spark.read.parquet(s"$sf/orders.parquet")
+    val ordAll = Tables.load(spark, sf, "orders")
     val maxOrd = ordAll.agg(max("o_orderkey")).collect()(0).getLong(0) + 1
     println("probe,k,a08_s,a09_s,f11_s,t19_s,t25_s")
     for (k <- Seq(1, 2, 4)) {
@@ -442,7 +442,7 @@ object ScaleProbe {
     // Fft.planeImages — FftSpec proves it equals the DFT algebra).
     println("probe,npix,dft_s,fft_s")
     for (npix <- Seq(8, 16, 32, 64)) {
-      val p = spark.read.parquet(s"$sf/orders.parquet")
+      val p = Tables.load(spark, sf, "orders")
         .filter(col("o_orderkey") % 32 === 0)
         .select(col("o_orderkey").as("row_id"),
           (((col("o_orderkey") * 7) % 201 - 100) / 2e1).as("w"),
@@ -520,7 +520,7 @@ object ScaleProbe {
           col("doc_id") + lit(i * maxDocAll)))
         .reduce(_ unionAll _)
         .write.mode("overwrite").parquet(s"$d/documents.parquet")
-      spark.read.parquet(s"$sf/events.parquet")
+      Tables.load(spark, sf, "events")
         .transform(df => (0 until k).map(i =>
           df.withColumn("event_id", col("event_id") + lit(i * 1000000L)))
           .reduce(_ unionAll _))
@@ -749,13 +749,14 @@ object ScaleProbe {
     // MAIN's count rides the ensureMs fingerprint (round 13) — thread it
     // through both probe calls (ADVICE r12)
     val mainRows = Some(nMain)
+    val ms = graft.io.MsDataset.read(spark, msDir)
     val (_, tModel, spModel) = time {
       // the fused predict+corrupt projection alone (stages 1-3)
-      SelfCalPipeline.corruptedVis(spark, msDir, sky, 64, mainRows)
+      SelfCalPipeline.corruptedVis(spark, ms, sky, 64, mainRows)
         .write.mode("overwrite").format("noop").save()
     }
     val (r, tCycle, spCycle) = time(
-      SelfCalPipeline.cycle(spark, msDir, sky, 64, 100, 1e-4, mainRows))
+      SelfCalPipeline.cycle(spark, ms, sky, 64, 100, 1e-4, mainRows))
     val (_, tCorrect, spCorrect) = time(
       r.corrected.write.mode("overwrite").format("noop").save())
     val (_, tSink, spSink) = time {
@@ -775,7 +776,7 @@ object ScaleProbe {
 
   private def semdedupAb(spark: SparkSession): Unit = {
     graft.expr.GraftFunctions.register(spark)
-    val emb0 = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    val emb0 = Tables.load(spark, "/root/testdata/sf0.1", "embeddings")
     val maxVec = emb0.agg(max("vec_id")).collect()(0).getLong(0) + 1
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

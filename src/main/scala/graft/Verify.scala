@@ -22,14 +22,14 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    // multi-executor masters: retry away from a dying executor
-    // immediately (see Bench — scheduler placement only, single-host
-    // node thresholds lifted so "localhost" is never starved)
-    if (!master.startsWith("local[")) builder
+    // local-cluster (the multi-executor master): retry away from a dying
+    // executor immediately (see Bench — scheduler placement only,
+    // single-host node thresholds lifted so "localhost" is never starved)
+    if (master.startsWith("local-cluster")) builder
       .config("spark.task.maxFailures", "8")
       .config("spark.excludeOnFailure.enabled", "true")
       .config("spark.excludeOnFailure.task.maxTaskAttemptsPerExecutor", "1")
-      .config("spark.excludeOnFailure.task.maxTaskAttemptsPerNode", "4")
+      .config("spark.excludeOnFailure.task.maxTaskAttemptsPerNode", "7")
       .config("spark.excludeOnFailure.stage.maxFailedExecutorsPerNode", "1000")
       .config("spark.excludeOnFailure.application.maxFailedExecutorsPerNode", "1000")
     // local iteration only (driver never sets it): "k=v;k=v" extra confs —

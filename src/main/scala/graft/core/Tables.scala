@@ -3,21 +3,96 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.graft.Listing
 
-/** Loaders for the driver-provided parquet tables (see TESTDATA.md).
+/** Loaders for the driver-provided parquet tables (see TESTDATA.md), and
+  * the one way the program opens a parquet table: [[Tables.parquet]].
   *
   * All tables live as single parquet files under a scale-factor directory.
-  * At cluster scale these would be partitioned datasets; the loaders go
-  * through `spark.read.parquet` so predicate pushdown / column pruning
-  * apply identically either way.
+  * At cluster scale these would be partitioned datasets; the loaders return
+  * an ordinary parquet scan either way, so predicate pushdown / column
+  * pruning apply identically.
+  *
+  * A plain `spark.read.parquet(path)` infers the schema with a Spark JOB
+  * (ParquetUtils.inferSchema → SchemaMergeUtils.mergeSchemasInParallel →
+  * parallelize(...).collect()), even with mergeSchema off, where that job
+  * reads a single footer. At registry scale that job was the largest item
+  * of plan construction (80–105 ms per open against 11–16 ms with a
+  * supplied schema, local[2], warm). [[parquet]] reads that one footer on
+  * the driver instead and hands the schema to the reader, so an open
+  * submits no job — the lazy, descriptor-only open of dask-ms's
+  * `xds_from_ms`.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
+  /** Open a parquet file or directory without a schema-inference job.
+    *
+    *  1. List `path` on the driver with the session's Hadoop conf and take
+    *     the file Spark's inference would read: names pass Spark's own
+    *     listing filter, a `_common_metadata` or `_metadata` summary comes
+    *     first, then the first data file in full-path order, recursing
+    *     into the `k=v` partition directories.
+    *  2. Read that file's footer and convert it exactly as Spark's
+    *     inference task does (`ParquetFooterReader.readFooter` with
+    *     SKIP_ROW_GROUPS, then `ParquetFileFormat.readSchemaFromFooter`
+    *     with a converter built from the session conf), so the Spark
+    *     schema key in the footer, `nanosAsLong` and TIMESTAMP_NTZ
+    *     inference behave the same.
+    *  3. `spark.read.schema(s).parquet(path)`: partition discovery still
+    *     appends the partition columns with their inferred types.
+    *
+    * With no data file (missing path, empty directory) it is the plain
+    * `spark.read.parquet(path)`, so the error is Spark's own. Stateless on
+    * purpose — every call reads the current footer, so an overwritten
+    * member table is never opened with a stale schema. Like Spark with
+    * `mergeSchema` off, it assumes every file of the table has the same
+    * schema. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val hconf = spark.sessionState.newHadoopConf()
+    schemaFile(new Path(path), hconf) match {
+      case Some(st) =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, hconf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The file whose footer Spark's inference would read, found without
+    * listing the whole tree: a summary file first, then files in the
+    * order their full paths sort (a directory sorts as `name/`). */
+  private def schemaFile(path: Path, hconf: Configuration): Option[FileStatus] = {
+    val fs = path.getFileSystem(hconf)
+    def order(st: FileStatus): (Int, String) = {
+      val n = st.getPath.getName
+      val summary = Seq("_common_metadata", "_metadata").indexOf(n)
+      (if (summary < 0) 2 else summary, if (st.isDirectory) s"$n/" else n)
+    }
+    def first(st: FileStatus): Option[FileStatus] =
+      if (st.isFile) Some(st)
+      else fs.listStatus(st.getPath)
+        .filterNot(c => Listing.filteredOut(c.getPath.getName))
+        .sortBy(order).iterator.flatMap(first).nextOption()
+    try first(fs.getFileStatus(path))
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

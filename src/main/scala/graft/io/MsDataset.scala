@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 
 /** CASA Measurement Set as an on-disk dataset of tables — the dask-ms
   * `xds_from_ms` analogue the reference's flagship example is built on
@@ -31,7 +32,7 @@ object MsDataset {
                       dataDescription: Option[DataFrame] = None)
 
   private def sub(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Tables.parquet(spark, s"$dir/$name.parquet")
 
   private def optSub(spark: SparkSession, dir: String,
                      name: String): Option[DataFrame] =
@@ -194,7 +195,7 @@ object MsDataset {
   def readMember(spark: SparkSession, msDir: String, name: String): DataFrame =
     // chan is a partition DIRECTORY on disk; partition-column inference
     // reads it as int — restore the long contract
-    spark.read.parquet(s"$msDir/$name.parquet")
+    Tables.parquet(spark, s"$msDir/$name.parquet")
       .withColumn("chan", col("chan").cast("long"))
 
   /** Synthetic MS dataset writer — the JVM twin of

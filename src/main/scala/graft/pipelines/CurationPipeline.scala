@@ -230,6 +230,6 @@ object CurationPipeline {
           cfg: Config = Config()): DataFrame = {
     curate(Tables.documents(spark, dir), Tables.embeddings(spark, dir), cfg)
       .write.mode("overwrite").partitionBy("source").parquet(outDir)
-    spark.read.parquet(outDir)
+    Tables.parquet(spark, outDir)
   }
 }

@@ -62,13 +62,13 @@ object SelfCalPipeline {
           solint: Int = 64, maxIter: Int = 100, tol: Double = 1e-4,
           mainRows: Option[Long] = None)
       : DataFrame = {
-    val r = cycle(spark, msDir, skyModelPath, solint, maxIter, tol, mainRows)
+    val ms = MsDataset.read(spark, msDir)
+    val r = cycle(spark, ms, skyModelPath, solint, maxIter, tol, mainRows)
     // rowHint = MAIN rows × nchan when the caller supplied the count
     // (the chans count is a dimension-table job) — lets the sink skip
     // the per-chan dynamic-partition layout below its threshold
     // (round 14, MsDataset.writeMember)
-    val rowHint = mainRows.map(_ *
-      MsDataset.chans(MsDataset.read(spark, msDir)).count())
+    val rowHint = mainRows.map(_ * MsDataset.chans(ms).count())
     MsDataset.writeMember(r.corrected, msDir, OutTable, rowHint)
     r.vis.unpersist(blocking = false)
     MsDataset.readMember(spark, msDir, OutTable)
@@ -82,12 +82,11 @@ object SelfCalPipeline {
     * the groupBy predict + a row_id SMJ here and spilled 3.8 GB + 1.2 GB
     * in 4 GB executors — this shape cannot spill (nothing data-sized is
     * ever sorted or hashed). */
-  private[graft] def corruptedVis(spark: SparkSession, msDir: String,
+  private[graft] def corruptedVis(spark: SparkSession, ms: MsDataset.Ms,
                                   skyModelPath: String, solint: Int,
                                   mainRows: Option[Long] = None)
       : DataFrame = {
     require(solint > 0, s"solint must be positive, got $solint")
-    val ms = MsDataset.read(spark, msDir)
     val (ra0, dec0) = MsDataset.phaseCentre(spark, ms)
 
     // solution-interval index from the DISTINCT epochs — distributed
@@ -139,14 +138,14 @@ object SelfCalPipeline {
   }
 
   /** The cycle without the sink, for specs that inspect the gains. */
-  private[graft] def cycle(spark: SparkSession, msDir: String,
+  private[graft] def cycle(spark: SparkSession, ms: MsDataset.Ms,
                            skyModelPath: String, solint: Int,
                            maxIter: Int, tol: Double,
                            mainRows: Option[Long] = None): Result = {
     // cached: the solve scans this once per iteration and the correct
     // stage reads it once more — without the cache the fused predict
     // and screen would re-execute per read (cheap but not free)
-    val in = corruptedVis(spark, msDir, skyModelPath, solint, mainRows).cache()
+    val in = corruptedVis(spark, ms, skyModelPath, solint, mainRows).cache()
 
     // 4. solve — the registered gauss_newton driver loop (grid keyed by
     //    (solution interval, antenna); chans fold into the same grid

@@ -37,7 +37,7 @@ class SelfCalPipelineSpec extends AnyFunSuite {
   }
 
   test("corrected residual collapses and the screen is recovered up to gauge") {
-    val r = SelfCalPipeline.cycle(spark, msDir, skyModel,
+    val r = SelfCalPipeline.cycle(spark, MsDataset.read(spark, msDir), skyModel,
       solint = 4, maxIter = 30, tol = 1e-14)
 
     // residual power relative to the observed power: the solve is on

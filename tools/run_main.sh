@@ -18,5 +18,5 @@ ADDOPENS="$ADDOPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 exec java $ADDOPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" -XX:ReservedCodeCacheSize=2g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
   "graft.$MAIN" "$@"
