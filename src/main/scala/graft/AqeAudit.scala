@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -40,16 +39,7 @@ object AqeAudit {
     val sfDir = args(0)
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    graft.core.Env.applyExtraConf(builder)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Env.session(32)
 
     val captured =
       new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every registered query at the env-selected
   * scale factor and prints one JSON line.
@@ -12,59 +11,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // Multi-executor masters only (round 14, the 4-JVM 100× gate): when a
-    // query's memory pressure kills an executor, its in-flight tasks die
-    // with RejectedExecutionException and ALL FOUR retries burn on the
-    // same dying JVM within milliseconds — long before the scheduler
-    // processes the executor's removal — because a single-host
-    // local-cluster has no topology spread. Task-level exclusion sends
-    // retry 2 to a DIFFERENT executor immediately (what a real cluster's
-    // node spread gives for free); the node-level thresholds are lifted
-    // so the one shared "localhost" node can never be starved (per-node
-    // attempts = maxFailures - 1, the largest value Spark's health tracker
-    // accepts; at 4 the node exclusion left a task no executor after 4 of
-    // its 8 attempts). Scheduler placement only — cannot change any
-    // result. Guarded on local-cluster, the one
-    // multi-executor master: on a bare `local` the per-executor limit of
-    // 1 would exclude the only executor at the first task failure;
-    // local and local[*] keep stock behavior.
-    if (master.startsWith("local-cluster")) builder
-      .config("spark.task.maxFailures", "8")
-      .config("spark.excludeOnFailure.enabled", "true")
-      .config("spark.excludeOnFailure.task.maxTaskAttemptsPerExecutor", "1")
-      .config("spark.excludeOnFailure.task.maxTaskAttemptsPerNode", "7")
-      .config("spark.excludeOnFailure.stage.maxFailedExecutorsPerNode", "1000")
-      .config("spark.excludeOnFailure.application.maxFailedExecutorsPerNode", "1000")
-    graft.core.Env.applyExtraConf(builder)
-    val spark = builder.getOrCreate()
-    // SPARK_GRAFT_LOG=INFO captures per-task serialized sizes (TaskSetManager)
-    // for the multi-JVM task-binary distribution audit; default stays WARN
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
-    // Executor-memory instrumentation (round-10): per-task spill bytes and
-    // peak execution memory accumulate in a listener; read per query. At
-    // the 50x replica this is the CI-asserted no-spill evidence — a plan
-    // that silently spills at scale is a plan that lies at 100 TB.
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    val peak = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-            peak.accumulateAndGet(m.peakExecutionMemory, math.max(_, _))
-          }
-        }
-      })
+    val spark = graft.core.Env.session(32)
+    val metrics = graft.core.Env.taskMetrics(spark)
     // warmup: codegen machinery + parquet reader/footers for the big facts
     spark.range(1L << 22).selectExpr("sum(id * 3)").collect()
     Seq("lineitem", "orders").foreach { t =>
@@ -104,56 +52,8 @@ object Bench {
         None
       }
     }
-    // Executor-quorum guard (round 14, the 4-JVM 100× gate lesson): when
-    // a query's own OOM kills an executor, the replacement registers
-    // ASYNCHRONOUSLY — and until it does, the next run's tasks (and all
-    // their retries: a same-host local-cluster has no healthy-node
-    // exclusion, so every attempt re-lands on the dying executor's
-    // thread pool) abort as RejectedExecutionException. Three of the
-    // four 100×-sweep "failures" were exactly this window — each query
-    // passed solo. Waiting for the post-warmup executor count to
-    // recover, OUTSIDE every timed region, makes each measurement start
-    // from the same healthy topology; no-op on local[*] where the count
-    // never drops.
-    // live-count source: scheduler-level add/remove events, NOT
-    // getExecutorMemoryStatus — dead executors' block managers linger in
-    // that map long enough for the next query to schedule onto the dying
-    // JVMs anyway (measured: the guard's first BM-based version was a
-    // no-op through a 4-executor OOM storm)
-    // seeded with the post-warmup healthy topology (the originals
-    // registered before this listener attached); the listener then
-    // tracks add/remove deltas exactly
-    val liveExecs = new java.util.concurrent.atomic.AtomicInteger(
-      math.max(0, spark.sparkContext.getExecutorMemoryStatus.size - 1))
-    // quorum = the FIXED post-warmup topology. NOT a high watermark: a
-    // replacement registering while its dead predecessor's removal is
-    // still unprocessed makes live momentarily read seed+1, and a
-    // watermark would freeze that transient as the forever-unreachable
-    // target (measured: a 240 s/query stall through the back half of a
-    // 100× sweep). A flap nets zero on the counter, so steady-state
-    // live == seed and the guard is quiescent.
-    val quorum = new java.util.concurrent.atomic.AtomicInteger(liveExecs.get())
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onExecutorAdded(
-            e: org.apache.spark.scheduler.SparkListenerExecutorAdded): Unit =
-          liveExecs.incrementAndGet()
-        override def onExecutorRemoved(
-            e: org.apache.spark.scheduler.SparkListenerExecutorRemoved): Unit =
-          liveExecs.decrementAndGet()
-      })
-    def awaitQuorum(): Unit = {
-      // removal events ride the async listener bus — drain it first so a
-      // loss that already happened is visible to the check below
-      org.apache.spark.graft.Listeners.drain(spark.sparkContext)
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (liveExecs.get() < quorum.get() && System.nanoTime() < deadline)
-        Thread.sleep(500)
-      // timeout = the cluster's steady size genuinely changed (or a
-      // startup-race miscount): adopt the observed reality so ONE wait
-      // is the cap, not a per-query tax for the rest of the sweep
-      if (liveExecs.get() < quorum.get()) quorum.set(liveExecs.get())
-    }
+    // seeded with the post-warmup healthy topology
+    val guard = graft.core.Env.quorum(spark)
     // optional comma-separated name filter for local iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
@@ -162,33 +62,16 @@ object Bench {
       case None => SparkEntry.registry
     }
     val results = selected.zipWithIndex.map { case (q, i) =>
-      // Periodic hygiene: a few queries pin block-manager state
-      // (localCheckpoint graphs) and every run leaves shuffle files whose
-      // cleanup rides the ContextCleaner, which only fires on driver GC.
-      // Over 160+ queries × 2 runs that accumulated state taxes later
-      // queries; forcing a GC every 16 queries keeps the JVM at
-      // steady-state so timings measure the QUERY, not the backlog.
-      // clearCache only drops SQL-cached DataFrames; RAW persisted RDDs
-      // (rankTimes' epoch rank, the BPE corpus, solver/beam-staging
-      // localCheckpoints, pcaIterates' moment matrix) accumulate across
-      // 223 queries × 2 runs and tax late queries with block-manager
-      // and GC backlog (round 13: p01 measured 15.8 s late in the full
-      // sweep vs ~6 s solo, same binary). Queries are SELF-CONTAINED —
-      // the invariant is stated loudly at Env.sweepSession.
-      if (i % 16 == 15) graft.core.Env.sweepSession(spark)
-      // drain the async listener bus on BOTH sides of the timed runs so
-      // spill/peak attribution is per-query exact (task-end events from
-      // query i must not land after once() returns and be charged to
-      // query i+1, nor be clobbered by the peak reset)
-      org.apache.spark.graft.Listeners.drain(spark.sparkContext)
-      val s0 = spill.get(); peak.set(0L)
-      def run(): Option[Double] = { awaitQuorum(); once(q) }
-      val v = (run(), run()) match {
-        case (Some(a), Some(b)) => math.min(a, b)
-        case _ => -1.0
+      guard.beforeQuery(i)
+      val m = metrics.span {
+        val first = once(q)
+        guard.await()
+        (first, once(q)) match {
+          case (Some(a), Some(b)) => math.min(a, b)
+          case _ => -1.0
+        }
       }
-      org.apache.spark.graft.Listeners.drain(spark.sparkContext)
-      (q.name, v, spill.get() - s0, peak.get())
+      (q.name, m.value, m.spillBytes, m.peakBytes)
     }
     val calibEnd = math.min(calib(), calib())
     def fmt(v: Double) = if (v < 0) "-1" else f"$v%.3f"

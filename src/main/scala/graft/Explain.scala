@@ -14,18 +14,10 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE wraps the plan in AdaptiveSparkPlan whose codegen subtrees
-      // only materialize at execution; disable it so debugCodegen sees
-      // the static plan the stages will compile to.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // AQE wraps the plan in AdaptiveSparkPlan whose codegen subtrees
+    // only materialize at execution; disable it so debugCodegen sees
+    // the static plan the stages will compile to.
+    val spark = graft.core.Env.session(8, "spark.sql.adaptive.enabled" -> "false")
     if (name == "audit") { audit(spark, sfDir); spark.stop(); return }
     val q = SparkEntry.registry.find(_.name == name)
       .getOrElse(sys.error(s"no such query: $name"))

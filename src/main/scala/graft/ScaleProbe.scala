@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Det, Tables}
+import graft.core.{Det, Env, Tables}
 
 /** Scaling probe: replicate the sf0.1 fact tables k× (keys shifted so
   * cardinalities scale too) and time the three canonical plan shapes —
@@ -13,36 +13,30 @@ import graft.core.{Det, Tables}
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = graft.core.Env.applyExtraConf(builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (args.headOption.contains("semdedup-ab")) { semdedupAb(spark); return }
+    val spark = Env.session(32)
+    // the one stage timer of every mode: wall seconds, plus the spill of
+    // the tasks each stage ran (bus drained on both sides, outside the wall)
+    val tm = Env.taskMetrics(spark)
     if (args.headOption.contains("curation")) {
-      curationStages(spark, args(1)); return
+      curationStages(spark, tm, args(1)); return
     }
     if (args.headOption.contains("selfcal")) {
-      selfcalStages(spark, args(1)); return
+      selfcalStages(spark, tm, args(1)); return
     }
     if (args.headOption.contains("predict")) {
-      predictStages(spark, args(1)); return
+      predictStages(spark, tm, args(1)); return
     }
     if (args.headOption.contains("imaging")) {
-      imagingStages(spark, args(1)); return
+      imagingStages(spark, tm, args(1)); return
     }
     if (args.headOption.contains("planwall")) {
-      planWall(spark, args(1), args(2)); return
+      planWall(spark, tm, args(1), args(2)); return
     }
     if (args.headOption.contains("beamstage")) {
       // time the pieces of the full-Jones beam staging (round 14)
       import graft.io.BeamFixture
       def t[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val a = f
-        println(f"$tag,${(System.nanoTime() - t0) / 1e9}%.3f"); a
+        val st = tm.span(f); println(f"$tag,${st.wallS}%.3f"); st.value
       }
       for (pass <- 1 to 2) {
         val quad = t(s"$pass,ensure_quad")(
@@ -75,28 +69,24 @@ object ScaleProbe {
 
     spark.range(1L << 22).selectExpr("sum(id * 3)").collect() // warmup
 
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-
     println("k,rows,agg_s,join_s,predict_s")
     for (k <- Seq(1, 2, 4, 10)) {
       val li = repl(li0, "l_orderkey", k)
       val o = repl(o0, "o_orderkey", k)
       val nRows = k * 600572L
-      val tAgg = time {
+      val tAgg = tm.span {
         li.groupBy("l_returnflag")
           .agg(sum(Det.cents(col("l_extendedprice"))).as("c"),
             count(lit(1)).as("n"))
           .write.mode("overwrite").format("noop").save()
-      }
-      val tJoin = time {
+      }.wallS
+      val tJoin = tm.span {
         li.join(o.hint("merge"), col("l_orderkey") === col("o_orderkey"))
           .groupBy("o_custkey")
           .agg(sum(Det.cents(col("l_extendedprice"))).as("c"))
           .write.mode("overwrite").format("noop").save()
-      }
-      val tPredict = time {
+      }.wallS
+      val tPredict = tm.span {
         // broadcast-expansion source sum over k x the row table
         val src = broadcast(spark.range(5).select(
           col("id").as("src_id"), (col("id") * 1e-2 - 2e-2).as("l"),
@@ -111,7 +101,7 @@ object ScaleProbe {
           .groupBy("row_id")
           .agg(sum(ph.re).as("vre"), sum(ph.im).as("vim"))
           .write.mode("overwrite").format("noop").save()
-      }
+      }.wallS
       println(f"$k,$nRows,$tAgg%.2f,$tJoin%.2f,$tPredict%.2f")
     }
 
@@ -138,7 +128,7 @@ object ScaleProbe {
         emb0.withColumn("vec_id", col("vec_id") + lit(i * maxVec)))
         .reduce(_ unionAll _)
       var cands = 0L
-      val t = time {
+      val t = tm.span {
         val bk = emb.select(col("vec_id").as("cid"), qCol.as("qv"))
           .withColumn("code", code).drop("qv")
         val qb = broadcast(bk.filter(col("cid") < 8)
@@ -147,7 +137,7 @@ object ScaleProbe {
           .withColumn("probe", expr("qcode ^ mask")))
         cands = bk.join(qb, col("code") === col("probe"))
           .filter(col("qid") =!= col("cid")).count()
-      }
+      }.wallS
       println(f"lsh_multiprobe,$k,${k * maxVec},$cands,$t%.2f")
     }
     // full-corpus near-dup (t10): EVERY vector probes, so candidate
@@ -162,7 +152,7 @@ object ScaleProbe {
         emb0.withColumn("vec_id", col("vec_id") + lit(i * maxVec)))
         .reduce(_ unionAll _)
       var cands = 0L
-      val t = time {
+      val t = tm.span {
         val bk = emb.select(col("vec_id").as("cid"), qCol.as("qv"))
           .withColumn("code", expr("lsh_code16(qv)")).drop("qv")
         val probes = bk.select(col("cid").as("cid_a"), col("code").as("code_a"))
@@ -171,7 +161,7 @@ object ScaleProbe {
           .withColumn("probe", expr("code_a ^ mask")).drop("mask", "code_a")
         cands = probes.join(bk, col("code") === col("probe")
           && col("cid_a") < col("cid")).count()
-      }
+      }.wallS
       println(f"neardup_full_corpus,$k,${k * maxVec},$cands,$t%.2f")
     }
     // corpus-scaled code width (the t10/e02/e09 rule): with a FIXED
@@ -208,7 +198,7 @@ object ScaleProbe {
         c.toDouble / n
       }
       var pdF = 0.0; var pdS = 0.0
-      val t = time { pdF = candPerDoc(8); pdS = candPerDoc(nbScaled.toInt) }
+      val t = tm.span { pdF = candPerDoc(8); pdS = candPerDoc(nbScaled.toInt) }.wallS
       println(f"lsh_width_scaling,$k,$n,$nbScaled,$pdF%.2f,$pdS%.3f,$t%.2f")
     }
     // organic corpus growth (doc slice, not replication): the UNBLOCKED
@@ -218,7 +208,7 @@ object ScaleProbe {
     for (k <- Seq(1, 2, 4)) {
       val docs = doc0.filter(col("doc_id") < 256L * k)
       var blocked = 0L; var unblocked = 0L
-      val t = time {
+      val t = tm.span {
         val toks0 = docs
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
           .distinct()
@@ -231,7 +221,7 @@ object ScaleProbe {
         unblocked = toks0.select(col("doc_id").as("a"), col("tok"))
           .join(toks0.select(col("doc_id").as("b"), col("tok")), "tok")
           .filter(col("a") < col("b")).count()
-      }
+      }.wallS
       println(f"jaccard_blocking,$k,${256L * k},$blocked,$unblocked,$t%.2f")
     }
     // t11 label propagation: per-round cost is one edge join + one
@@ -257,7 +247,7 @@ object ScaleProbe {
       val nEdges = dup.count()
       val sym = dup.select(col("cid_a").as("u"), col("cid_b").as("v"))
         .unionByName(dup.select(col("cid_b").as("u"), col("cid_a").as("v")))
-      val t = time {
+      val t = tm.span {
         var lbl = emb.select(col("vec_id").as("cid"), col("vec_id").as("lbl"))
         for (_ <- 1 to 4) {
           val nbr = lbl.select(col("cid").as("lc"), col("lbl").as("ll"))
@@ -268,7 +258,7 @@ object ScaleProbe {
             .select(col("cid"), col("nl").as("lbl"))
         }
         lbl.groupBy("lbl").count().write.mode("overwrite").format("noop").save()
-      }
+      }.wallS
       dup.unpersist()
       println(f"t11_label_prop,$k,${k * maxVec},$nEdges,$t%.2f")
     }
@@ -288,7 +278,7 @@ object ScaleProbe {
         .select(col("cid").as("kc"), col("qv").as("cvec"))
       val d2 = expr(
         "aggregate(zip_with(qv, cvec, (a, b) -> (a - b) * (a - b)), 0L, (a, x) -> a + x)")
-      val t = time {
+      val t = tm.span {
         val asg = corpus.crossJoin(broadcast(seeds))
           .select(col("cid"), col("kc"), d2.as("d2"))
           .groupBy("cid").agg(min(struct(col("d2"), col("kc"))).as("m"))
@@ -296,7 +286,7 @@ object ScaleProbe {
         asg.join(ce, "cid").groupBy("kc", "pos")
           .agg(round(avg(col("qv").cast("double"))).cast("long").as("cq"))
           .write.mode("overwrite").format("noop").save()
-      }
+      }.wallS
       println(f"e05_lloyd_iter,$k,${k * maxVec},$t%.2f")
     }
     // t29 SemDeDup: the scale contract is that the cluster count grows
@@ -320,12 +310,12 @@ object ScaleProbe {
         corpus.filter(col("cid") % maxVec < 8))
       val nSeeds = seeds.count()
       var pairs = 0L
-      val t = time {
+      val t = tm.span {
         val cell = graft.operators.SemDedup.assign(corpus, seeds)
         pairs = cell.select(col("k"), col("cid").as("a"))
           .join(cell.select(col("k"), col("cid").as("b")), "k")
           .filter(col("a") < col("b")).count()
-      }
+      }.wallS
       println(f"t29_semdedup_pairs,$k,${k * maxVec},$nSeeds,$pairs,$t%.2f")
     }
     // t29 assignment codegen contract: with the broadcast-centroid
@@ -340,11 +330,11 @@ object ScaleProbe {
     for (nc <- Seq(8, 64, 512)) {
       val corpus = emb0.select(col("vec_id").as("cid"), qCol.as("qv"))
       val seeds = graft.operators.SemDedup.seedsOf(corpus, nc.toLong)
-      val t = time {
+      val t = tm.span {
         graft.operators.SemDedup.assign(corpus, seeds)
           .select(col("cid"), col("k"))
           .write.mode("overwrite").format("noop").save()
-      }
+      }.wallS
       val unit = t * 1e9 / (maxVec.toDouble * nc)
       println(f"t29_assign_flat,$nc,$maxVec,$t%.2f,$unit%.1f")
     }
@@ -353,7 +343,7 @@ object ScaleProbe {
     println("probe,k,docs,secs")
     for (k <- Seq(1, 2, 4)) {
       val docs = doc0.filter(col("doc_id") < 1250L * k)
-      val t = time {
+      val t = tm.span {
         val grams = docs
           .select(col("doc_id"), split(col("text"), " ").as("tk"))
           .filter(size(col("tk")) >= 3)
@@ -364,7 +354,7 @@ object ScaleProbe {
           .groupBy("doc_id").agg(sum(col("c")).as("n_grams"),
             count(lit(1)).as("n_unique"), max(col("c")).as("max_rep"))
           .write.mode("overwrite").format("noop").save()
-      }
+      }.wallS
       println(f"t14_repetition,$k,${1250L * k},$t%.2f")
     }
     // t21/t22/t24 pair counting: the TextCombiner LUT ships ≤16 384 rows
@@ -376,18 +366,18 @@ object ScaleProbe {
       val docs = (0 until k).map(i =>
         doc0.withColumn("doc_id", col("doc_id") + lit(i * maxDoc)))
         .reduce(_ unionAll _)
-      val tE = time {
+      val tE = tm.span {
         docs.filter(length(col("text")) >= 2)
           .select(explode(expr(
             "transform(sequence(1, length(text) - 1), i -> substring(text, i, 2))"))
             .as("pair"))
           .groupBy("pair").agg(count(lit(1)).as("n"))
           .write.mode("overwrite").format("noop").save()
-      }
-      val tC = time {
+      }.wallS
+      val tC = tm.span {
         graft.operators.TextCombiner.pairCodeCounts(docs, "text")
           .write.mode("overwrite").format("noop").save()
-      }
+      }.wallS
       println(f"pair_combiner,$k,${k * maxDoc},$tE%.2f,$tC%.2f")
     }
 
@@ -416,10 +406,10 @@ object ScaleProbe {
           java.nio.file.Paths.get(s"$sf/$t.parquet"),
           java.nio.file.Paths.get(s"$d/$t.parquet"),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      def tq(n: String): Double = time {
+      def tq(n: String): Double = tm.span {
         SparkEntry.queries(n)(spark, d)
           .write.mode("overwrite").format("noop").save()
-      }
+      }.wallS
       val (a8, a9, f11, t19, t25) = (tq("a08_bda_mapper"),
         tq("a09_bda_average"), tq("f11_wstack_dirty"),
         tq("t19_decontamination"), tq("t25_pipeline_pack"))
@@ -460,18 +450,18 @@ object ScaleProbe {
       def gridsOf: DataFrame =
         graft.operators.WStack.planeGrids(p, taps, nPlanes = 4,
           wMax = 5.0, eta = 1e-2, fsum = c => Det.fsum(c)).drop("n_hits")
-      val tDft = time {
+      val tDft = tm.span {
         graft.operators.WStack.dirtyImageDft(gridsOf, px, taps,
           nPlanes = 4, wMax = 5.0, fsum = c => Det.fsum(c),
           r6 = c => Det.r6(c))
           .write.mode("overwrite").format("noop").save()
-      }
-      val tFft = time {
+      }.wallS
+      val tFft = tm.span {
         graft.operators.Fft.planeImages(gridsOf, npix)
           .groupBy("x", "y")
           .agg(sum("ire").as("re"), sum("iim").as("im"))
           .write.mode("overwrite").format("noop").save()
-      }
+      }.wallS
       println(f"f11_image_size,$npix,$tDft%.2f,$tFft%.2f")
     }
 
@@ -497,10 +487,10 @@ object ScaleProbe {
       val r = ev.filter(col("event_type") === "view")
         .select(col("user_id"), col("tus"), col("event_id"))
       var n = 0L
-      val t = time {
+      val t = tm.span {
         n = graft.plans.AsOfJoinPlan.asOfNative(l, r, "user_id", "tus",
           Map("event_id" -> "view_id")).count()
-      }
+      }.wallS
       println(f"s20_asof_native,$k,${nEv0 * k},$n,$t%.2f")
     }
 
@@ -525,10 +515,10 @@ object ScaleProbe {
           df.withColumn("event_id", col("event_id") + lit(i * 1000000L)))
           .reduce(_ unionAll _))
         .write.mode("overwrite").parquet(s"$d/events.parquet")
-      def tq(n: String): Double = time {
+      def tq(n: String): Double = tm.span {
         SparkEntry.queries(n)(spark, d)
           .write.mode("overwrite").format("noop").save()
-      }
+      }.wallS
       val (t44, m16, t46, s22) = (tq("t44_edit_distance"),
         tq("m16_audio_spectrum"), tq("t46_url_canonical"),
         tq("s22_attribution"))
@@ -547,42 +537,23 @@ object ScaleProbe {
       val q = emb.select(col("vec_id"), expr(
         "qquant(embedding, 1e4)")
         .as("qv"))
-      val t = time {
+      val t = tm.span {
         q.agg(expr("scatter_moments(qv)").as("m"))
           .write.mode("overwrite").format("noop").save()
-      }
+      }.wallS
       println(f"e11_scatter,$k,${k * maxVec},$t%.2f")
     }
     spark.stop()
   }
 
-  /** A/B for the round-9 assign rework: the codegen `nearest_centroid`
-    * path (SemDedup.assign, Tungsten end to end) against the RETIRED
-    * round-8 `rdd.mapPartitions` + `Row.fromSeq` implementation, inlined
-    * below verbatim as the reference. Same math, same tie rule — the
-    * SemDedupSpec A/B pins bit-identity; this probe pins the conversion
-    * tax. Corpus = sf0.1 embeddings replicated with the organic jitter,
-    * nc = 512 seeds (the t29 k = n/512 contract at ~260k rows). */
   /** Per-stage wall + spill attribution for the p03 curation funnel at an
     * arbitrary replica dir — each stage is materialized CUMULATIVELY (no
     * caching, the real recompute plan), so the first stage whose spill
     * delta is non-zero is the spiller. Honors SPARK_GRAFT_MASTER /
     * SPARK_GRAFT_EXTRA_CONF so the 4-JVM small-heap layout is probeable. */
-  private def curationStages(spark: SparkSession, dir: String): Unit = {
+  private def curationStages(spark: SparkSession, tm: Env.TaskMetrics,
+                             dir: String): Unit = {
     import graft.pipelines.CurationPipeline
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    // removed in the finally (ADVICE r12): in-session reuse must not
-    // accumulate listeners and double-count spill
-    val spillListener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null)
-          spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-    spark.sparkContext.addSparkListener(spillListener)
-    try {
     val docs = graft.core.Tables.documents(spark, dir)
     val emb = graft.core.Tables.embeddings(spark, dir)
     val cfg = CurationPipeline.Config()
@@ -595,16 +566,10 @@ object ScaleProbe {
     println("stage,wall_s,spill_delta_bytes,rows")
     Seq("lang" -> s1, "gopher" -> s2, "exact" -> s3, "neardup" -> s4,
       "semantic" -> s5, "pack" -> s6).foreach { case (name, df) =>
-      org.apache.spark.graft.Listeners.drain(spark.sparkContext)
-      val sp0 = spill.get()
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").format("noop").save()
-      val w = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.Listeners.drain(spark.sparkContext)
+      val st = tm.span(df.write.mode("overwrite").format("noop").save())
       // rows via a second cheap pass only for funnel context
-      println(f"$name,$w%.2f,${spill.get() - sp0},${df.count()}")
+      println(f"$name,${st.wallS}%.2f,${st.spillBytes},${df.count()}")
     }
-    } finally spark.sparkContext.removeSparkListener(spillListener)
   }
 
   /** Per-stage wall attribution for the p01 predict pipeline (round 13):
@@ -613,32 +578,29 @@ object ScaleProbe {
     * full-Jones expressions), first execution (noop), the MODEL_DATA
     * member write, and the read-back — run TWICE so the second pass
     * shows the warm (bench-comparable) split. */
-  private def predictStages(spark: SparkSession, dir: String): Unit = {
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-    val ((msDir, nMain), tMs) =
-      time(graft.queries.PipelineQ.ensureMs(spark, dir))
+  private def predictStages(spark: SparkSession, tm: Env.TaskMetrics,
+                            dir: String): Unit = {
+    val ms = tm.span(graft.queries.PipelineQ.ensureMs(spark, dir))
+    val (msDir, nMain) = ms.value
     val sky = graft.queries.PipelineQ.ensureSkyModel()
     val beam = graft.queries.PipelineQ.ensureBeam()
     println("pass,stage,wall_s")
     for (pass <- 1 to 2) {
-      val rPlan = time(
+      val plan = tm.span(
         graft.pipelines.PredictPipeline.modelDataFullJones(
           spark, msDir, sky, beam, mainRows = Some(nMain)))
-      val md = rPlan._1
-      val rNoop = time(md.write.mode("overwrite").format("noop").save())
-      val rWrite = time(graft.io.MsDataset.writeModelData(md, msDir,
+      val md = plan.value
+      val noop = tm.span(md.write.mode("overwrite").format("noop").save())
+      val write = tm.span(graft.io.MsDataset.writeModelData(md, msDir,
         Some(nMain * 2)))
-      val rRead = time(
+      val read = tm.span(
         graft.io.MsDataset.readModelData(spark, msDir)
           .write.mode("overwrite").format("noop").save())
-      if (pass == 1) println(f"1,ensure_ms,$tMs%.2f")
-      println(f"$pass,plan_build,${rPlan._2}%.2f")
-      println(f"$pass,first_noop,${rNoop._2}%.2f")
-      println(f"$pass,member_write,${rWrite._2}%.2f")
-      println(f"$pass,readback_noop,${rRead._2}%.2f")
+      if (pass == 1) println(f"1,ensure_ms,${ms.wallS}%.2f")
+      println(f"$pass,plan_build,${plan.wallS}%.2f")
+      println(f"$pass,first_noop,${noop.wallS}%.2f")
+      println(f"$pass,member_write,${write.wallS}%.2f")
+      println(f"$pass,readback_noop,${read.wallS}%.2f")
       // catalyst phase attribution for the final DF's own QueryExecution
       md.queryExecution.tracker.phases.foreach { case (ph, s) =>
         println(f"$pass,catalyst_$ph,${(s.endTimeMs - s.startTimeMs) / 1e3}%.2f")
@@ -654,21 +616,19 @@ object ScaleProbe {
     * (round 14): times q.fn() — every eager analysis and staging job
     * taken while the DataFrame chain is BUILT — against the noop
     * execution of the result, twice (pass 2 = warm). */
-  private def planWall(spark: SparkSession, name: String, dir: String): Unit = {
+  private def planWall(spark: SparkSession, tm: Env.TaskMetrics,
+                       name: String, dir: String): Unit = {
     val q = SparkEntry.registry.find(_.name == name)
       .getOrElse(sys.error(s"no such query: $name"))
     println("pass,stage,wall_s")
     for (pass <- 1 to 2) {
-      val t0 = System.nanoTime()
-      val df = q.fn(spark, dir)
-      val t1 = System.nanoTime()
-      df.write.mode("overwrite").format("noop").save()
-      val t2 = System.nanoTime()
-      df.write.mode("overwrite").format("noop").save()
-      val t3 = System.nanoTime()
-      println(f"$pass,construct,${(t1 - t0) / 1e9}%.2f")
-      println(f"$pass,first_noop,${(t2 - t1) / 1e9}%.2f")
-      println(f"$pass,second_noop,${(t3 - t2) / 1e9}%.2f")
+      val build = tm.span(q.fn(spark, dir))
+      val df = build.value
+      def noop(): Double =
+        tm.span(df.write.mode("overwrite").format("noop").save()).wallS
+      println(f"$pass,construct,${build.wallS}%.2f")
+      println(f"$pass,first_noop,${noop()}%.2f")
+      println(f"$pass,second_noop,${noop()}%.2f")
       df.queryExecution.tracker.phases.foreach { case (ph, s) =>
         println(f"$pass,catalyst_$ph,${(s.endTimeMs - s.startTimeMs) / 1e3}%.2f")
       }
@@ -679,37 +639,34 @@ object ScaleProbe {
     * 14): combined grid aggregation + checkpoint, PSF patch collect,
     * dirty-image DFT, facet clean (components), and the residual
     * subtraction — run twice so pass 2 is the warm split. */
-  private def imagingStages(spark: SparkSession, dir: String): Unit = {
+  private def imagingStages(spark: SparkSession, tm: Env.TaskMetrics,
+                            dir: String): Unit = {
     import graft.pipelines.ImagingPipeline
     val cfg = graft.queries.PipelineQ.ImgCfg
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
+    def noop(df: DataFrame): Double =
+      tm.span(df.write.mode("overwrite").format("noop").save()).wallS
     println("pass,stage,wall_s")
     for (pass <- 1 to 2) {
       val vis = graft.queries.PipelineQ.imagingVis(spark, dir)
-      val (both, tGrid) =
-        time(ImagingPipeline.combinedGrids(vis, cfg).localCheckpoint())
-      val ((psf, peak), tPsf) = time(ImagingPipeline.psfFromGrids(
+      val grid = tm.span(ImagingPipeline.combinedGrids(vis, cfg).localCheckpoint())
+      val both = grid.value
+      val psfSt = tm.span(ImagingPipeline.psfFromGrids(
         both.select(col("wplane"), col("gu"), col("gv"),
           col("u_re").as("g_re"), col("u_im").as("g_im")), cfg))
-      val (dirty, _) = time(graft.operators.WStack.dirtyImageDft(
+      val (psf, peak) = psfSt.value
+      val dirty = graft.operators.WStack.dirtyImageDft(
         both.select(col("wplane"), col("gu"), col("gv"),
           col("g_re"), col("g_im")),
         ImagingPipeline.pixelGrid(spark, cfg), cfg.taps,
-        cfg.nPlanes, cfg.wMax, fsum = c => sum(c), r6 = identity))
-      val (_, tDirty) = time(
-        dirty.write.mode("overwrite").format("noop").save())
-      val (comps, _) = time(ImagingPipeline.cleanFacets(
+        cfg.nPlanes, cfg.wMax, fsum = c => sum(c), r6 = identity)
+      val tDirty = noop(dirty)
+      val comps = ImagingPipeline.cleanFacets(
         dirty.select(col("x"), col("y"),
-          (col("dirty_dt") / peak).as("value")), psf, cfg))
-      val (_, tClean) = time(
-        comps.write.mode("overwrite").format("noop").save())
-      val (_, tRes) = time(ImagingPipeline.residualVis(vis, comps, cfg)
-        .write.mode("overwrite").format("noop").save())
-      println(f"$pass,grid_ckpt,$tGrid%.2f")
-      println(f"$pass,psf_collect,$tPsf%.2f")
+          (col("dirty_dt") / peak).as("value")), psf, cfg)
+      val tClean = noop(comps)
+      val tRes = noop(ImagingPipeline.residualVis(vis, comps, cfg))
+      println(f"$pass,grid_ckpt,${grid.wallS}%.2f")
+      println(f"$pass,psf_collect,${psfSt.wallS}%.2f")
       println(f"$pass,dirty_noop,$tDirty%.2f")
       println(f"$pass,clean_noop,$tClean%.2f")
       println(f"$pass,residual_noop,$tRes%.2f")
@@ -722,122 +679,35 @@ object ScaleProbe {
     * gauss_newton driver loop), the correct stage, and the sink+readback.
     * The solver loop's wall divided by its iteration count (it logs to
     * stderr at INFO) localizes per-iteration floor vs data cost. */
-  private def selfcalStages(spark: SparkSession, dir: String): Unit = {
+  private def selfcalStages(spark: SparkSession, tm: Env.TaskMetrics,
+                            dir: String): Unit = {
     import graft.pipelines.SelfCalPipeline
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    val spillListener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null)
-          spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-    spark.sparkContext.addSparkListener(spillListener)
-    try {
-    def time[A](f: => A): (A, Double, Long) = {
-      org.apache.spark.graft.Listeners.drain(spark.sparkContext)
-      val sp0 = spill.get()
-      val t0 = System.nanoTime(); val a = f
-      val w = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graft.Listeners.drain(spark.sparkContext)
-      (a, w, spill.get() - sp0)
-    }
-    val ((msDir, nMain), tMs, spMs) =
-      time(graft.queries.PipelineQ.ensureMs(spark, dir))
+    val ensure = tm.span(graft.queries.PipelineQ.ensureMs(spark, dir))
+    val (msDir, nMain) = ensure.value
     val sky = graft.queries.PipelineQ.ensureSkyModel()
     // MAIN's count rides the ensureMs fingerprint (round 13) — thread it
     // through both probe calls (ADVICE r12)
     val mainRows = Some(nMain)
     val ms = graft.io.MsDataset.read(spark, msDir)
-    val (_, tModel, spModel) = time {
-      // the fused predict+corrupt projection alone (stages 1-3)
-      SelfCalPipeline.corruptedVis(spark, ms, sky, 64, mainRows)
-        .write.mode("overwrite").format("noop").save()
-    }
-    val (r, tCycle, spCycle) = time(
+    // the fused predict+corrupt projection alone (stages 1-3)
+    val model = tm.span(SelfCalPipeline.corruptedVis(spark, ms, sky, 64, mainRows)
+      .write.mode("overwrite").format("noop").save())
+    val cycle = tm.span(
       SelfCalPipeline.cycle(spark, ms, sky, 64, 100, 1e-4, mainRows))
-    val (_, tCorrect, spCorrect) = time(
+    val r = cycle.value
+    val correct = tm.span(
       r.corrected.write.mode("overwrite").format("noop").save())
-    val (_, tSink, spSink) = time {
+    val sink = tm.span {
       graft.io.MsDataset.writeMember(r.corrected, msDir, "CORRECTED_DATA",
         Some(nMain * 2))
       graft.io.MsDataset.readMember(spark, msDir, "CORRECTED_DATA").count()
     }
     r.vis.unpersist(blocking = false)
     println("stage,wall_s,spill_delta_bytes")
-    println(f"ensure_ms,$tMs%.2f,$spMs")
-    println(f"corrupt_vis_noop,$tModel%.2f,$spModel")
-    println(f"cycle_solve,$tCycle%.2f,$spCycle")
-    println(f"correct_noop,$tCorrect%.2f,$spCorrect")
-    println(f"sink_readback,$tSink%.2f,$spSink")
-    } finally spark.sparkContext.removeSparkListener(spillListener)
-  }
-
-  private def semdedupAb(spark: SparkSession): Unit = {
-    graft.expr.GraftFunctions.register(spark)
-    val emb0 = Tables.load(spark, "/root/testdata/sf0.1", "embeddings")
-    val maxVec = emb0.agg(max("vec_id")).collect()(0).getLong(0) + 1
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+    Seq("ensure_ms" -> ensure, "corrupt_vis_noop" -> model,
+      "cycle_solve" -> cycle, "correct_noop" -> correct,
+      "sink_readback" -> sink).foreach { case (stage, st) =>
+      println(f"$stage,${st.wallS}%.2f,${st.spillBytes}")
     }
-    def rddAssign(corpus: DataFrame, seeds: DataFrame): DataFrame = {
-      val cents: Array[(Long, Array[Long])] = seeds
-        .select(col("k"), col("qv")).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
-        .sortBy(_._1)
-      val bc = spark.sparkContext.broadcast(cents)
-      val qvIdx = corpus.schema.fieldIndex("qv")
-      val outSchema = org.apache.spark.sql.types.StructType(
-        corpus.schema.fields :+ org.apache.spark.sql.types.StructField(
-          "k", org.apache.spark.sql.types.LongType, nullable = false))
-      val rdd = corpus.rdd.mapPartitions { it =>
-        val cs = bc.value
-        it.map { row =>
-          val qv = row.getSeq[Long](qvIdx).toArray
-          var bestK = cs(0)._1
-          var bestD = Long.MaxValue
-          var i = 0
-          while (i < cs.length) {
-            val cq = cs(i)._2
-            var d = 0L
-            var j = 0
-            while (j < qv.length) { val t = qv(j) - cq(j); d += t * t; j += 1 }
-            if (d < bestD) { bestD = d; bestK = cs(i)._1 }
-            i += 1
-          }
-          org.apache.spark.sql.Row.fromSeq(row.toSeq :+ bestK)
-        }
-      }
-      spark.createDataFrame(rdd, outSchema)
-    }
-    println("probe,k,rows,nseeds,rdd_s,codegen_s,speedup")
-    for (k <- Seq(10, 50, 200)) {
-      val emb = (0 until k).map { i =>
-        emb0.withColumn("vec_id", col("vec_id") + lit(i * maxVec))
-          .withColumn("qv", expr(
-            s"transform(embedding, (x, p) -> " +
-              s"CAST(ROUND(CAST(x AS DOUBLE) * 1e6) AS BIGINT) + " +
-              s"((vec_id % 97) * 131 + p * 17 + $i * 53) % 401 - 200)"))
-      }.reduce(_ unionAll _)
-      val corpus = emb.select(col("vec_id").as("cid"), col("qv")).cache()
-      corpus.count() // materialize: time the assign, not the jitter
-      val seeds = graft.operators.SemDedup.seedsFrom(
-        corpus.filter(col("cid") < 512))
-      def sink(df: DataFrame): Unit = df.select(col("cid"), col("k"))
-        .write.mode("overwrite").format("noop").save()
-      // build each plan ONCE and time re-executions: a fresh build pays
-      // ~0.4 s of Janino compile + broadcast setup, which at 400k probe
-      // rows swamps the per-row difference but at any real corpus is
-      // noise — steady-state per-row throughput is the contract
-      val dfNew = graft.operators.SemDedup.assign(corpus, seeds)
-      val dfOld = rddAssign(corpus, seeds)
-      sink(dfNew); sink(dfOld) // JIT + codegen warmup
-      val tNew = (1 to 3).map(_ => time(sink(dfNew))).min
-      val tOld = (1 to 3).map(_ => time(sink(dfOld))).min
-      corpus.unpersist()
-      println(f"semdedup_ab,$k,${k * maxVec},512,$tOld%.2f,$tNew%.2f,${tOld / tNew}%.2f")
-    }
-    spark.stop()
   }
 }

@@ -97,7 +97,7 @@ object Bpe {
       val corpus = docs.filter(length(col(textCol)) >= 2)
         .select(col(idCol).cast("long"), col(textCol))
         .as[(Long, String)].collect()
-      return trainLocal(spark, corpus, nMerges, alphabet, firstSym, idCol)
+      return trainLocal(spark, corpus, nMerges, alphabet, firstSym)
     }
 
     var cur: RDD[(Long, String)] = docs
@@ -161,8 +161,7 @@ object Bpe {
     * symbol space — and md5 = lowercase hex over UTF-8 bytes). */
   private def trainLocal(spark: org.apache.spark.sql.SparkSession,
                          corpus0: Array[(Long, String)], nMerges: Int,
-                         alphabet: Int, firstSym: Int,
-                         idCol: String): DataFrame = {
+                         alphabet: Int, firstSym: Int): DataFrame = {
     val ids = corpus0.map(_._1)
     val texts = corpus0.map(_._2)
     val merges = new scala.collection.mutable.ArrayBuffer[(Long, Long)]

@@ -11,27 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class ExtensionsSpec extends AnyFunSuite {
 
   test("spark.sql.extensions wires functions and the as-of strategy by config") {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx2g", "-cp", System.getProperty("java.class.path"),
-      "graft.ExtensionsCheck")
-    val out = new StringBuilder
-    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val reader = new java.io.BufferedReader(
-      new java.io.InputStreamReader(proc.getInputStream))
-    var line = reader.readLine()
-    while (line != null) { out.append(line).append('\n'); line = reader.readLine() }
-    val exit = proc.waitFor()
-    assert(exit === 0, s"ExtensionsCheck failed:\n${out.toString.takeRight(2000)}")
-    assert(out.toString.contains("EXTENSIONS OK"))
+    val (exit, out) = Fork.run("graft.ExtensionsCheck")
+    assert(exit === 0, s"ExtensionsCheck failed:\n${out.takeRight(2000)}")
+    assert(out.contains("EXTENSIONS OK"))
   }
 }

@@ -20,7 +20,8 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    graft.core.Env.applyExtraConf(b).getOrCreate()
+    graft.core.Env.extraConf(sys.env).foreach { case (k, v) => b.config(k, v) }
+    b.getOrCreate()
   }
 
   val sf: String = "/root/testdata/sf0.001"

@@ -3,8 +3,8 @@
 
 Usage: python3 tools/strictcheck.py <verify_out_dir> <sf_dir>
 
-The plain checker (tools/check.py) compares values NUMERICALLY, which is
-blind to two divergence classes that a byte/repr-level driver hash sees:
+A NUMERIC compare of the values is blind to two divergence classes that a
+byte/repr-level driver hash sees:
 
   1. TYPE divergence: DuckDB types window/plain SUM(BIGINT) as HUGEINT and
      bare decimal literals as DECIMAL; pandas renders those as float64 (or
