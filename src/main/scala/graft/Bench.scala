@@ -71,7 +71,7 @@ object Bench {
           case _ => -1.0
         }
       }
-      (q.name, m.value, m.spillBytes, m.peakBytes)
+      (q.name, m.value, m.spillBytes, m.peakBytes, m.gatePaths)
     }
     val calibEnd = math.min(calib(), calib())
     def fmt(v: Double) = if (v < 0) "-1" else f"$v%.3f"
@@ -79,17 +79,17 @@ object Bench {
     // of stdout, so whatever is truncated is the cheap head — the slow
     // queries (the ones a regression diagnosis needs) always land inside
     // the captured window, immediately before the headline object.
-    val qs = results.sortBy { case (_, v, _, _) => if (v < 0) Double.MaxValue else v }
-      .map { case (k, v, _, _) => "\"" + k + "\":" + fmt(v) }
+    val byTime = results.sortBy { r => if (r._2 < 0) Double.MaxValue else r._2 }
+    val qs = byTime.map(r => "\"" + r._1 + "\":" + fmt(r._2))
       .mkString("{", ",", "}")
     // spill map carries only offenders (empty object when no query spilled
     // — the expected state); peak is the max single-task execution memory
     val spillMap = results.filter(_._3 > 0)
-      .map { case (k, _, sp, _) => "\"" + k + "\":" + sp }
+      .map(r => "\"" + r._1 + "\":" + r._3)
       .mkString("{", ",", "}")
     val peakMax = if (results.isEmpty) 0L else results.map(_._4).max
     val failed = results.count(_._2 < 0)
-    val total = results.collect { case (_, v, _, _) if v >= 0 => v }.sum
+    val total = results.map(_._2).filter(_ >= 0).sum
     val calibJson = s""""calib_start_sec":${fmt(calibStart)},"calib_end_sec":${fmt(calibEnd)}"""
     val full =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":$failed,"spilled":${results.count(_._3 > 0)},"spill_bytes":$spillMap,"peak_task_mem":$peakMax,$calibJson,"sf":"$sfDir","queries":$qs}"""
@@ -104,11 +104,12 @@ object Bench {
     // self-contained JSON line; ascending by time so the expensive
     // queries — the ones a regression diagnosis needs — sit nearest the
     // end of stdout, inside any tail window. The one-line headline
-    // object stays LAST.
-    results.sortBy { case (_, v, _, _) => if (v < 0) Double.MaxValue else v }
-      .foreach { case (k, v, _, _) =>
-        println(s"""{"q":"$k","sec":${fmt(v)}}""")
-      }
+    // object stays LAST. A query that consulted a size gate also says
+    // which path each gate took ("gates":"calibrate.solve=driver").
+    byTime.foreach { case (k, v, _, _, g) =>
+      val gates = if (g.isEmpty) "" else s""","gates":"$g""""
+      println(s"""{"q":"$k","sec":${fmt(v)}$gates}""")
+    }
     // only FULL runs update the committed record — a SPARK_GRAFT_ONLY
     // filtered iteration run must not clobber the 170+-query baseline
     if (only.isEmpty) try {

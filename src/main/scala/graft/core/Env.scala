@@ -1,17 +1,18 @@
 package graft.core
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorAdded,
-  SparkListenerExecutorRemoved, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerExecutorAdded, SparkListenerExecutorRemoved,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** The harness layer of every main: the one session builder
   * ([[Env.session]]), the executor-quorum guard and per-query hygiene of
-  * the sequential mains ([[Env.Quorum]]), the per-task spill/peak
-  * listener ([[Env.TaskMetrics]]) and the `SPARK_GRAFT_*` env-var
-  * plumbing they read. The env vars are local-iteration only — the driver
+  * the sequential mains ([[Env.Quorum]]), the per-task spill/peak and
+  * gate-decision listener ([[Env.TaskMetrics]]) and the `SPARK_GRAFT_*`
+  * env-var plumbing they read. The env vars are local-iteration only — the driver
   * never sets them. `ExtensionsCheck` is the one main that builds its own
   * session: it tests a static `spark.sql.extensions` conf in a fresh JVM,
   * which a shared builder would mask. */
@@ -68,6 +69,10 @@ object Env {
     *    discipline; the driver always runs plain local;
     *  - UTC, `nanosAsLong` (the events table's TIMESTAMP(NANOS) as a raw
     *    long), UI off;
+    *  - log level `SPARK_GRAFT_LOG` (default WARN; INFO captures per-task
+    *    serialized sizes from TaskSetManager for the multi-JVM
+    *    task-binary distribution audit), as `spark.log.level`, which the
+    *    context applies as it starts — so its own start-up stays quiet;
     *  - the caller's `extra` pairs;
     *  - the exclusion confs above, on a `local-cluster` master only;
     *  - `SPARK_GRAFT_EXTRA_CONF` last, so it overrides everything above —
@@ -81,23 +86,20 @@ object Env {
       "spark.sql.shuffle.partitions" -> cpus,
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.ui.enabled" -> "false") ++
+      "spark.ui.enabled" -> "false",
+      "spark.log.level" -> env.getOrElse("SPARK_GRAFT_LOG", "WARN")) ++
       extra ++
       (if (master.startsWith("local-cluster")) LocalClusterExclusion else Nil) ++
       extraConf(env)
   }
 
   /** The session of every main but `ExtensionsCheck`: [[sessionConf]] of
-    * the process environment, log level `SPARK_GRAFT_LOG` (default WARN;
-    * INFO captures per-task serialized sizes from TaskSetManager for the
-    * multi-JVM task-binary distribution audit). */
+    * the process environment. */
   def session(defaultCpus: Int, extra: (String, String)*): SparkSession = {
     val builder = SparkSession.builder()
     sessionConf(sys.env, defaultCpus, extra)
       .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
-    spark
+    builder.getOrCreate()
   }
 
   /** Between-query session hygiene for the sequential harness mains
@@ -213,19 +215,32 @@ object Env {
   }
 
   /** One measured span: wall seconds of the body, bytes its tasks spilled
-    * (memory + disk) and the largest single-task peak execution memory. */
+    * (memory + disk), the largest single-task peak execution memory and
+    * the `Escalate` decisions its gates posted, in order. */
   final case class Span[A](value: A, wallS: Double, spillBytes: Long,
-                           peakBytes: Long)
+                           peakBytes: Long, gates: Seq[Escalate.Decision]) {
+    /** Distinct decisions as `gate=path,...` in first-seen order; empty
+      * when no gate was consulted. */
+    def gatePaths: String = gates.map(_.toString).distinct.mkString(",")
+  }
 
   /** Executor-memory instrumentation (round 10): per-task spill bytes and
     * peak execution memory accumulate in one listener and are read per
     * [[span]]. At the 50x replica this is the CI-asserted no-spill
     * evidence — a plan that silently spills at scale is a plan that lies
     * at 100 TB. Deltas are read per span, so a reused session never
-    * double-counts (ADVICE r12). */
+    * double-counts (ADVICE r12). The same listener collects the
+    * `Escalate` decisions, so each span also says which path every size
+    * gate it consulted took. */
   final class TaskMetrics(drain: () => Unit) extends SparkListener {
     private val spill = new AtomicLong
     private val peak = new AtomicLong
+    private val gates = new ConcurrentLinkedQueue[Escalate.Decision]
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case d: Escalate.Decision => gates.add(d)
+      case _ =>
+    }
 
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
       val m = te.taskMetrics
@@ -241,12 +256,12 @@ object Env {
       * clobbered by the peak reset, and none of its own arrive late. */
     def span[A](f: => A): Span[A] = {
       drain()
-      val s0 = spill.get(); peak.set(0L)
+      val s0 = spill.get(); peak.set(0L); gates.clear()
       val t0 = System.nanoTime()
       val a = f
       val wall = (System.nanoTime() - t0) / 1e9
       drain()
-      Span(a, wall, spill.get() - s0, peak.get())
+      Span(a, wall, spill.get() - s0, peak.get(), gates.asScala.toList)
     }
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.core.Escalate
 
 /** The BPE trainer's ROUND LOOP as an RDD driver loop — the t51/t52 body
   * (Sennrich et al. 2015: count adjacent pairs → global argmax → rewrite
@@ -77,35 +78,32 @@ object Bpe {
       s"merged symbols chr($firstSym..${firstSym + nMerges - 1}) must stay " +
         s"inside the $alphabet-symbol space")
 
-    // Sub-threshold escalation (round 14): when the filtered corpus fits
-    // spark.graft.bpeLocalMaxBytes (default 64 MB; the size probe is one
-    // cheap aggregate, BEFORE any collect), the whole round loop runs on
-    // the driver — nMerges distributed rounds at sf0.1 were ~3.5 s of
-    // pure per-round job overhead for ~1.5 MB of corpus. Counts are
-    // exact integers (order-free sums), the argmax tie-break and the
-    // String.replace rewrite are the very same JVM code the executors
-    // run, and the md5/length surface is mirrored exactly (BpeSpec pins
-    // local ≡ distributed) — so t51/t52's hashed bytes cannot move. A
-    // corpus-scale input exceeds the gate and keeps the RDD loop.
-    val localMax = spark.conf.getOption("spark.graft.bpeLocalMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    val sz = docs.filter(length(col(textCol)) >= 2)
-      .agg(count(lit(1)), sum(length(col(textCol)))).head()
-    val nDocs = sz.getLong(0)
-    val totChars = if (sz.isNullAt(1)) 0L else sz.getLong(1)
-    if (totChars * 2L + nDocs * 32L <= localMax) {
-      val corpus = docs.filter(length(col(textCol)) >= 2)
-        .select(col(idCol).cast("long"), col(textCol))
-        .as[(Long, String)].collect()
-      return trainLocal(spark, corpus, nMerges, alphabet, firstSym)
-    }
-
     var cur: RDD[(Long, String)] = docs
       .filter(length(col(textCol)) >= 2)
       .select(col(idCol).cast("long"), col(textCol))
       .as[(Long, String)]
       .rdd
     cur.persist(StorageLevel.MEMORY_AND_DISK)
+    // Sub-threshold escalation (round 14): when the filtered corpus fits
+    // the `Escalate.local` gate (2 bytes per code point + 32 per doc,
+    // measured BEFORE any collect), the whole round loop runs on the
+    // driver — nMerges distributed rounds at sf0.1 were ~3.5 s of pure
+    // per-round job overhead for ~1.5 MB of corpus. Counts are exact
+    // integers (order-free sums), the argmax tie-break and the
+    // String.replace rewrite are the very same JVM code the executors
+    // run, and the md5/length surface is mirrored exactly (BpeSpec pins
+    // local ≡ distributed) — so t51/t52's hashed bytes cannot move. A
+    // corpus-scale input exceeds the gate and keeps the RDD loop. The
+    // size probe is the pass that fills the corpus cache, so either path
+    // reads the corpus from the cache: the input is scanned once.
+    val (nDocs, totChars) = cur.aggregate((0L, 0L))(
+      (a, kv) => (a._1 + 1L, a._2 + kv._2.codePointCount(0, kv._2.length)),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+    if (Escalate.local(spark, "bpe.corpus", totChars * 2L + nDocs * 32L)) {
+      val corpus = cur.collect()
+      cur.unpersist(blocking = false)
+      return trainLocal(spark, corpus, nMerges, alphabet, firstSym)
+    }
     var prev: RDD[(Long, String)] = null
     val merges = new scala.collection.mutable.ArrayBuffer[(Long, Long)]
     val alpha = alphabet // primitive capture: keep task closures tiny

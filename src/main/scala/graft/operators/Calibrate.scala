@@ -1,9 +1,9 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.core.{CxCol, Det}
+import graft.core.{CxCol, Det, Escalate}
 
 /** Phase-only gain calibration — SURVEY §2.6 G5/G6
   * (africanus/calibration/phase_only/phase_only.py:30-308).
@@ -31,59 +31,32 @@ import graft.core.{CxCol, Det}
   * driver memory — `broadcast()` COLLECTS the build side to the driver, so
   * forcing it would OOM exactly the case the grid shape exists for. The
   * grid row count is known exactly (counted when the initial checkpoint
-  * materializes), so each iteration hints broadcast ONLY while the
-  * estimated grid bytes fit under spark.sql.autoBroadcastJoinThreshold and
-  * degrades to a shuffle join (both sides exchanged on the grid keys)
-  * beyond it — the same plan Catalyst would pick for a fact-fact join.
+  * materializes), so the gather broadcasts ONLY while
+  * `Escalate.broadcastable` passes the estimated grid bytes (under
+  * spark.sql.autoBroadcastJoinThreshold) and degrades to a shuffle join
+  * (both sides exchanged on the grid keys) beyond it — the same plan
+  * Catalyst would pick for a fact-fact join.
   *
-  * Iteration constants (the local-latency side of the distributed design):
+  * Both solvers share one iteration driver ([[iterate]]): the input pin,
+  * the `Escalate.local` solve gate, the grid gate and both grid loops
+  * live there once; the DIE and DDE solvers supply their driver mirror
+  * and their per-iteration jhr terms. Iteration constants (the
+  * local-latency side of the distributed design):
   *  - ONE broadcast (or one exchange) of the grid per iteration serves
   *    BOTH gather sides — the p- and q-joins reference the same plan
   *    through two aliases, and exchange reuse ships it once;
   *  - grid materialization (RDD localCheckpoint) and the max|Δφ|
   *    convergence scalar happen in the SAME job (the reduce runs as the
-  *    checkpoint caches), halving the per-iteration job count.
-  *    `checkEvery` > 1 would skip intermediate checkpoints, but the
-  *    update plan contains the data-sized jhr aggregation — letting it
-  *    stack makes every broadcast re-execute the stacked aggs, which
-  *    measured 6× SLOWER than checkpointing each iteration; keep 1;
+  *    checkpoint caches), halving the per-iteration job count. Every
+  *    iteration checkpoints: the update plan contains the data-sized jhr
+  *    aggregation, and a broadcast of an unmaterialized grid re-executes
+  *    its stacked joins (checkpointing every third iteration ran 40×
+  *    slower on g06);
   *  - each materialized checkpoint is unpersisted as soon as its
   *    successor exists, so executor block storage holds ≤2 grid copies
   *    instead of one per iteration.
   */
 object Calibrate {
-
-  /** Parse spark.sql.autoBroadcastJoinThreshold ("10485760", "10MB", "-1");
-    * ≤0 disables broadcasting. */
-  private[operators] def broadcastThreshold(spark: SparkSession): Long = {
-    val s = spark.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
-    if (s.startsWith("-")) -1L
-    else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
-  }
-
-  /** True iff a gain grid of `gridRows` × `nCols` (longs/doubles) rows is
-    * safe to collect-and-broadcast under the session threshold. Exposed
-    * for PlanSpec. */
-  private[graft] def gridBroadcastable(spark: SparkSession, gridRows: Long,
-                                       nCols: Int): Boolean = {
-    val thr = broadcastThreshold(spark)
-    // 8 bytes per numeric field + UnsafeRow header/null-bitmap overhead
-    thr > 0 && gridRows * (8L * nCols + 16L) <= thr
-  }
-
-  /** Byte bound under which the whole SOLVE runs driver-resident (round
-    * 14, VERDICT item 6): when the solution-interval problem is this
-    * small, each distributed iteration is pure overhead (a plan + 2-3
-    * AQE stage jobs + a collect for ~μs of arithmetic — measured
-    * ~0.14-0.5 s/iteration at sf0.1), and the reference itself solves
-    * per-chunk in-process (phase_only.py runs on in-memory numpy
-    * chunks). The gate is data-derived — a 100 TB MAIN always exceeds it
-    * and keeps the distributed loop — and the collect is bounded by the
-    * threshold at ANY scale (the assignAuto escalation class). */
-  private[graft] def solveLocalMaxBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.solveLocalMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
 
   /** Driver mirror of one fsum TERM: round(x·scale) via the same
     * BigDecimal HALF_UP path Spark's Round uses, cast-to-long truncation
@@ -212,26 +185,32 @@ object Calibrate {
     in.as("x").join(b.as("gp"), pCond).join(b.as("gq"), qCond)
   }
 
-  /** Input df columns: time_index, ant1, ant2, extraKeys..., m_re, m_im
-    * (model), v_re, v_im (observed), w (weight). Returns
-    * (time_index, extraKeys..., ant, phase).
-    *
-    * `extraKeys` resolves the gain grid beyond (time, ant) — pass
-    * Seq("chan") (or Seq("chan", "dir")) for the reference's full jones
-    * shape; the keys must be columns of `df` shared by both antennas of a
-    * row. `detSum` switches the jhr aggregation to Det.fsum (terms rounded
-    * to 1e-6, summed as longs) — the order-free deterministic mode hashed
-    * oracle surfaces require (g09); the performance path keeps plain double
-    * sums. jhj is always a plain sum: it is computed once from the model,
-    * and the registered inputs are dyadic rationals whose products/sums are
-    * IEEE-exact in any order. */
-  def gaussNewtonPhaseOnly(df: DataFrame, maxIter: Int = 20,
-                           tol: Double = 1e-10,
-                           checkEvery: Int = 1,
-                           extraKeys: Seq[String] = Nil,
-                           detSum: Boolean = false): DataFrame = {
+  /** The p/q scatter of one per-row term onto the grid keys (keyCols...,
+    * ant): ONE explode, not a union of two projections — a union's
+    * children are independent codegen stages, so the pinned fact frame
+    * (and the gather join) would be scanned twice per pass; same terms,
+    * same order-free aggregation. */
+  private def scatter(df: DataFrame, keys: Seq[Column], keyCols: Seq[String],
+                      ant1: Column, ant2: Column, termP: Column,
+                      termQ: Column, name: String): DataFrame =
+    df.select((keys :+ explode(array(
+        struct(ant1.as("ant"), termP.as(name)),
+        struct(ant2.as("ant"), termQ.as(name)))).as("c")): _*)
+      .select((keyCols.map(col) :+ col("c.ant").as("ant")
+        :+ col(s"c.$name").as(name)): _*)
+
+  /** The iteration driver both solvers share. `inCols` are pinned from
+    * `df`; `local` is the solver's driver mirror over the pinned input;
+    * `jhrTerms` turns one iteration's gather join (`in` aliased x, the
+    * grid as gp/gq) into its scattered (keyCols..., ant, jhr_c) terms,
+    * summed per grid key with Det.fsum when `detSum`. Returns
+    * (time_index, ant, keyCols.tail..., phase) sorted on its keys. */
+  private def iterate(df: DataFrame, inCols: Seq[String],
+                      keyCols: Seq[String], maxIter: Int, tol: Double,
+                      detSum: Boolean)(
+      local: DataFrame => DataFrame,
+      jhrTerms: DataFrame => DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val keyCols = Seq("time_index") ++ extraKeys
     val gridKeys = keyCols :+ "ant"
     // localCheckpoint, not cache (round 14, VERDICT item 6): a cached
     // Dataset keeps its FULL logical plan (p04's carries the fused
@@ -245,82 +224,51 @@ object Calibrate {
     // taken for the grid checkpoints; blocks are freed via the id delta
     // below (Dataset.unpersist cannot release checkpoint blocks).
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val in = df.select((keyCols ++
-      Seq("ant1", "ant2", "m_re", "m_im", "v_re", "v_im", "w")).map(col): _*)
-      .localCheckpoint()
+    val in = df.select(inCols.map(col): _*).localCheckpoint()
     val inRddIds =
       spark.sparkContext.getPersistentRDDs.keySet.diff(persistedBefore)
     def releaseIn(): Unit =
       inRddIds.foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
         .foreach(_.unpersist(blocking = false)))
-    // sub-threshold escalation (round 14): the whole solve runs on the
-    // driver when the problem fits the byte gate — see solveLocalDie
-    if (in.count() * (8L * (keyCols.size + 7) + 16L)
-        <= solveLocalMaxBytes(spark)) {
-      require(checkEvery == 1,
-        s"checkEvery=$checkEvery unsupported on the driver-resident " +
-          "solve (it checks every iteration); use checkEvery = 1")
-      val out = solveLocalDie(in, keyCols, maxIter, tol, detSum)
+    // sub-threshold escalation (round 14): when the solution-interval
+    // problem is this small, each distributed iteration is pure overhead,
+    // and the reference itself solves per-chunk in-process
+    // (phase_only.py runs on in-memory numpy chunks)
+    if (Escalate.local(spark, "calibrate.solve",
+        Escalate.rowBytes(in.count(), inCols.size))) {
+      val out = local(in)
       releaseIn()
       return out
     }
-    val jhrAgg: Column => Column =
-      if (detSum) c => Det.fsum(c) else c => sum(c)
 
     // initial grid: every (keys, ant) on either side, φ = 0, with the
     // model-only jhj (DIAG_DIAG fast path) aggregated in the same pass.
-    // The p/q scatter is ONE explode, not a union of two projections —
-    // a union's children are independent codegen stages, so the cached
-    // fact frame (and the gather join, in the iteration below) would be
-    // scanned twice per pass; same terms, same order-free aggregation.
-    val jhjTerm = col("w") * (col("m_re") * col("m_re")
-      + col("m_im") * col("m_im"))
-    val scatter0 = in.select((keyCols.map(col) :+ explode(array(
-        struct(col("ant1").as("ant"), jhjTerm.as("jhj_c")),
-        struct(col("ant2").as("ant"), jhjTerm.as("jhj_c")))).as("c")): _*)
-      .select((keyCols.map(col) :+ col("c.ant").as("ant")
-        :+ col("c.jhj_c").as("jhj_c")): _*)
-    // the grid carries cos/sin of its own phase (gc, gs): trig of the
+    // The grid carries cos/sin of its own phase (gc, gs): trig of the
     // NEW phase is computed once per GRID ENTRY as the checkpoint
     // materializes, not once per visibility row per gather side — at
     // 100 TB that moves ~4 libm calls/row/iteration onto a broadcast-
     // class relation. Values are bit-identical: cos/sin of the very
     // same double the phase column stores (round-13, guide §1.2 step 2).
-    val grid0 = scatter0.groupBy(gridKeys.map(col): _*)
+    val jhjTerm = col("w") * (col("m_re") * col("m_re")
+      + col("m_im") * col("m_im"))
+    val grid0 = scatter(in, keyCols.map(col), keyCols, col("ant1"),
+        col("ant2"), jhjTerm, jhjTerm, "jhj_c")
+      .groupBy(gridKeys.map(col): _*)
       .agg(sum(col("jhj_c")).as("jhj"))
       .withColumn("phase", lit(0.0))
       .select((gridKeys.map(col) :+ col("phase") :+ col("jhj")
         :+ lit(1.0).as("gc") :+ lit(0.0).as("gs")): _*)
     var ckptRdd: RDD[Row] = grid0.rdd.localCheckpoint()
     val gridRows = ckptRdd.count() // eager + exact size for the join hint
-    var prevRdd: RDD[Row] = null
-    // fresh LogicalRDD wrap: localCheckpoint alone keeps the child plan's
-    // STATISTICS, and this loop joins the grid against a broadcast of
-    // itself — the size estimate would cube every iteration and Catalyst's
-    // BigInt stats arithmetic becomes the (exponential) bottleneck
-    var phases: DataFrame = spark.createDataFrame(ckptRdd, grid0.schema)
-
-    val bcastGrid = gridBroadcastable(spark, gridRows, gridKeys.size + 4)
+    val bcastGrid = Escalate.broadcastable(spark, "calibrate.grid",
+      Escalate.rowBytes(gridRows, gridKeys.size + 4))
     val dIdx = gridKeys.size + 4  // layout: keys..., phase, jhj, gc, gs, d
+    val jhrAgg: Column => Column =
+      if (detSum) c => Det.fsum(c) else c => sum(c)
 
     // one iteration's update plan over whatever grid frame is current
     def stepPlan(phasesDf: DataFrame): DataFrame = {
-      val withG = gatherJoin(in, phasesDf, keyCols, bcastGrid)
-      val gp = CxCol(col("gp.gc"), col("gp.gs"))
-      val gq = CxCol(col("gq.gc"), col("gq.gs"))
-      val m = CxCol(col("m_re"), col("m_im"))
-      val v = CxCol(col("v_re"), col("v_im"))
-      val vm = gp * m * gq.conj
-      val r = v - vm
-      val jhrTerm = col("w") * (vm.re * r.im - vm.im * r.re)
-      val xKeys = keyCols.map(k => col(s"x.$k").as(k))
-      // one-pass p/q scatter (see grid0): the jacobian antisymmetry rides
-      // in the exploded pair, so the gather join runs once per iteration
-      val step = withG.select((xKeys :+ explode(array(
-          struct(col("x.ant1").as("ant"), jhrTerm.as("jhr_c")),
-          struct(col("x.ant2").as("ant"), (-jhrTerm).as("jhr_c")))).as("c")): _*)
-        .select((keyCols.map(col) :+ col("c.ant").as("ant")
-          :+ col("c.jhr_c").as("jhr_c")): _*)
+      val step = jhrTerms(gatherJoin(in, phasesDf, keyCols, bcastGrid))
         .groupBy(gridKeys.map(col): _*)
         .agg(jhrAgg(col("jhr_c")).as("jhr"))
       val d = coalesce(lit(0.5) * col("jhr") / col("jhj"), lit(0.0))
@@ -333,16 +281,9 @@ object Calibrate {
 
     var it = 0
     var maxDelta = Double.MaxValue
+    var phases: DataFrame = null
     if (bcastGrid) {
-      // The driver-resident loop checks convergence EVERY iteration; a
-      // checkEvery > 1 caller would get different iteration counts (and
-      // thus different phases) depending on whether the grid happens to
-      // fit the broadcast threshold — fail loudly instead of diverging
-      // (round-14 ADVICE; all registry callers use the default 1).
-      require(checkEvery == 1,
-        s"checkEvery=$checkEvery unsupported on the driver-resident " +
-          "grid path (it checks every iteration); use checkEvery = 1")
-      // DRIVER-RESIDENT grid loop (round 13): gridBroadcastable already
+      // DRIVER-RESIDENT grid loop (round 13): the broadcast gate already
       // certifies the grid is collect-safe — so instead of re-reading a
       // checkpointed RDD through a broadcast-build JOB each iteration,
       // hold the rows on the driver and hand each iteration a
@@ -350,8 +291,7 @@ object Calibrate {
       // job) whose collect IS the convergence check: per-iteration jobs
       // drop 2 → 1 and the checkpoint/unpersist machinery disappears.
       // Same gather plan, same aggregation, same doubles — the grid just
-      // lives one hop closer. Grids past the threshold keep the
-      // distributed checkpoint loop below.
+      // lives one hop closer.
       var localRows: Array[Row] = ckptRdd.collect()
       ckptRdd.unpersist(blocking = false)
       val schema = grid0.schema
@@ -369,10 +309,17 @@ object Calibrate {
       }
       phases = spark.createDataFrame(
         java.util.Arrays.asList(localRows: _*), schema)
-    } else while (it < maxIter && maxDelta > tol) {
-      val updated = stepPlan(phases)
-      it += 1
-      if (it % checkEvery == 0 || it >= maxIter) {
+    } else {
+      // distributed checkpoint loop for grids past the threshold. Fresh
+      // LogicalRDD wrap: localCheckpoint alone keeps the child plan's
+      // STATISTICS, and this loop joins the grid against itself — the
+      // size estimate would compound every iteration and Catalyst's
+      // BigInt stats arithmetic becomes the (exponential) bottleneck
+      phases = spark.createDataFrame(ckptRdd, grid0.schema)
+      var prevRdd: RDD[Row] = null
+      while (it < maxIter && maxDelta > tol) {
+        val updated = stepPlan(phases)
+        it += 1
         // materialize the grid AND compute the convergence scalar in one
         // job: localCheckpoint caches the partitions as this reduce runs
         val rdd = updated.rdd.localCheckpoint()
@@ -383,22 +330,49 @@ object Calibrate {
         prevRdd = ckptRdd
         ckptRdd = rdd
         phases = spark.createDataFrame(rdd, updated.schema).drop("d")
-      } else {
-        // between checkpoints the plan stacks ≤(checkEvery−1) join
-        // layers over the last checkpointed grid. WARNING (measured):
-        // each of those layers re-executes its own data-sized joins and
-        // nested broadcasts every time the stacked plan is broadcast
-        // again — checkEvery = 3 ran 40× SLOWER than 1 on g06. Keep
-        // checkEvery = 1 unless the fact table is large enough that the
-        // per-iteration materialize job dominates the replayed joins.
-        phases = updated.drop("d")
       }
     }
     releaseIn()
     // output axis order mirrors the reference jones shape: time, ant, chan/dir
-    val outKeys = Seq("time_index", "ant") ++ extraKeys
+    val outKeys = Seq("time_index", "ant") ++ keyCols.drop(1)
     phases.select((outKeys.map(col) :+ col("phase")): _*)
       .orderBy(outKeys.map(col): _*)
+  }
+
+  /** Input df columns: time_index, ant1, ant2, extraKeys..., m_re, m_im
+    * (model), v_re, v_im (observed), w (weight). Returns
+    * (time_index, ant, extraKeys..., phase).
+    *
+    * `extraKeys` resolves the gain grid beyond (time, ant) — pass
+    * Seq("chan") (or Seq("chan", "dir")) for the reference's full jones
+    * shape; the keys must be columns of `df` shared by both antennas of a
+    * row. `detSum` switches the jhr aggregation to Det.fsum (terms rounded
+    * to 1e-6, summed as longs) — the order-free deterministic mode hashed
+    * oracle surfaces require (g09); the performance path keeps plain double
+    * sums. jhj is always a plain sum: it is computed once from the model,
+    * and the registered inputs are dyadic rationals whose products/sums are
+    * IEEE-exact in any order. */
+  def gaussNewtonPhaseOnly(df: DataFrame, maxIter: Int = 20,
+                           tol: Double = 1e-10,
+                           extraKeys: Seq[String] = Nil,
+                           detSum: Boolean = false): DataFrame = {
+    val keyCols = Seq("time_index") ++ extraKeys
+    iterate(df, keyCols ++ Seq("ant1", "ant2", "m_re", "m_im", "v_re",
+        "v_im", "w"), keyCols, maxIter, tol, detSum)(
+      solveLocalDie(_, keyCols, maxIter, tol, detSum),
+      withG => {
+        val gp = CxCol(col("gp.gc"), col("gp.gs"))
+        val gq = CxCol(col("gq.gc"), col("gq.gs"))
+        val m = CxCol(col("m_re"), col("m_im"))
+        val v = CxCol(col("v_re"), col("v_im"))
+        val vm = gp * m * gq.conj
+        val r = v - vm
+        val jhrTerm = col("w") * (vm.re * r.im - vm.im * r.re)
+        // the jacobian antisymmetry rides in the exploded pair, so the
+        // gather join runs once per iteration
+        scatter(withG, keyCols.map(k => col(s"x.$k").as(k)), keyCols,
+            col("x.ant1"), col("x.ant2"), jhrTerm, -jhrTerm, "jhr_c")
+      })
   }
 
   /** Driver-resident DDE solve — [[solveLocalDie]]'s sibling for
@@ -522,7 +496,7 @@ object Calibrate {
     * DIE solve (grid keys now include dir), then ONE window over
     * (row_id, extraKeys) sums the per-direction corrupted models into the
     * shared residual — a second data-sized but keyed exchange; the jhr
-    * scatter-add reuses the union+groupBy pattern. The direction sum is a
+    * scatter-add reuses the shared explode+groupBy. The direction sum is a
     * 2-term-exact commutative add at the registered n_dir = 2; detSum mode
     * keeps jhr order-free via fsum exactly as the DIE path. */
   def gaussNewtonPhaseOnlyDirs(df: DataFrame, maxIter: Int = 20,
@@ -530,127 +504,33 @@ object Calibrate {
                                extraKeys: Seq[String] = Nil,
                                detSum: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
     val keyCols = Seq("time_index") ++ extraKeys :+ "dir"
-    val gridKeys = keyCols :+ "ant"
-    // localCheckpoint leaf + id-delta release — see the DIE solver above
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val in = df.select((Seq("row_id") ++ keyCols ++
-      Seq("ant1", "ant2", "m_re", "m_im", "v_re", "v_im", "w")).map(col): _*)
-      .localCheckpoint()
-    val inRddIds =
-      spark.sparkContext.getPersistentRDDs.keySet.diff(persistedBefore)
-    def releaseIn(): Unit =
-      inRddIds.foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
-        .foreach(_.unpersist(blocking = false)))
-    // sub-threshold escalation (round 14) — see solveLocalDirs
-    if (in.count() * (8L * (keyCols.size + 8) + 16L)
-        <= solveLocalMaxBytes(spark)) {
-      val out = solveLocalDirs(in, keyCols, extraKeys, maxIter, tol, detSum)
-      releaseIn()
-      return out
-    }
-    val jhrAgg: Column => Column =
-      if (detSum) c => Det.fsum(c) else c => sum(c)
-
-    val jhjTerm = col("w") * (col("m_re") * col("m_re")
-      + col("m_im") * col("m_im"))
-    // one-pass p/q scatter (the DIE solver's explode idiom)
-    val scatter0 = in.select((keyCols.map(col) :+ explode(array(
-        struct(col("ant1").as("ant"), jhjTerm.as("jhj_c")),
-        struct(col("ant2").as("ant"), jhjTerm.as("jhj_c")))).as("c")): _*)
-      .select((keyCols.map(col) :+ col("c.ant").as("ant")
-        :+ col("c.jhj_c").as("jhj_c")): _*)
-    // grid-level cos/sin (gc, gs) — same hoist as the DIE solver above
-    val grid0 = scatter0.groupBy(gridKeys.map(col): _*)
-      .agg(sum(col("jhj_c")).as("jhj"))
-      .withColumn("phase", lit(0.0))
-      .select((gridKeys.map(col) :+ col("phase") :+ col("jhj")
-        :+ lit(1.0).as("gc") :+ lit(0.0).as("gs")): _*)
-    var ckptRdd: RDD[Row] = grid0.rdd.localCheckpoint()
-    val gridRows = ckptRdd.count()
-    var prevRdd: RDD[Row] = null
-    var phases: DataFrame = spark.createDataFrame(ckptRdd, grid0.schema)
-
-    val bcastGrid = gridBroadcastable(spark, gridRows, gridKeys.size + 4)
-    val dIdx = gridKeys.size + 4
-
     // the residual is shared across directions: window over the
     // per-(row, chan) group (row_id makes it unique; extraKeys for clarity)
     val rowWin = Window.partitionBy(
       (Seq("row_id") ++ extraKeys).map(col): _*)
-
-    def stepPlan(phasesDf: DataFrame): DataFrame = {
-      val withG = gatherJoin(in, phasesDf, keyCols, bcastGrid)
-      val gp = CxCol(col("gp.gc"), col("gp.gs"))
-      val gq = CxCol(col("gq.gc"), col("gq.gs"))
-      val m = CxCol(col("m_re"), col("m_im"))
-      val vm = gp * m * gq.conj
-      val perDir = withG.select((Seq(col("x.row_id").as("row_id")) ++
-        keyCols.map(k => col(s"x.$k").as(k)) ++
-        Seq(col("x.ant1").as("ant1"), col("x.ant2").as("ant2"),
-          col("v_re"), col("v_im"), col("w"),
-          vm.re.as("vm_re"), vm.im.as("vm_im"))): _*)
-      val withR = perDir
-        .withColumn("r_re", col("v_re") - sum(col("vm_re")).over(rowWin))
-        .withColumn("r_im", col("v_im") - sum(col("vm_im")).over(rowWin))
-      val jhrTerm = col("w") *
-        (col("vm_re") * col("r_im") - col("vm_im") * col("r_re"))
-      // one-pass p/q scatter: the union form would re-run the gather
-      // join AND the shared-residual window once per side
-      val step = withR.select((keyCols.map(col) :+ explode(array(
-          struct(col("ant1").as("ant"), jhrTerm.as("jhr_c")),
-          struct(col("ant2").as("ant"), (-jhrTerm).as("jhr_c")))).as("c")): _*)
-        .select((keyCols.map(col) :+ col("c.ant").as("ant")
-          :+ col("c.jhr_c").as("jhr_c")): _*)
-        .groupBy(gridKeys.map(col): _*)
-        .agg(jhrAgg(col("jhr_c")).as("jhr"))
-      val d = coalesce(lit(0.5) * col("jhr") / col("jhj"), lit(0.0))
-      val newPhase = col("phase") + d
-      phasesDf.join(step, gridKeys, "left")
-        .select((gridKeys.map(col) :+ newPhase.as("phase")
-          :+ col("jhj") :+ cos(newPhase).as("gc") :+ sin(newPhase).as("gs")
-          :+ d.as("d")): _*)
-    }
-
-    var it = 0
-    var maxDelta = Double.MaxValue
-    if (bcastGrid) {
-      // driver-resident grid loop — see the DIE solver above (round 13):
-      // per-iteration jobs 2 → 1, LocalRelation broadcast builds without
-      // a job, identical doubles; big grids keep the checkpoint loop.
-      var localRows: Array[Row] = ckptRdd.collect()
-      ckptRdd.unpersist(blocking = false)
-      val schema = grid0.schema
-      while (it < maxIter && maxDelta > tol) {
-        val phasesL = spark.createDataFrame(
-          java.util.Arrays.asList(localRows: _*), schema)
-        val withD = stepPlan(phasesL).collect()
-        maxDelta = 0.0
-        localRows = withD.map { row =>
-          val d = math.abs(row.getDouble(dIdx))
-          if (d > maxDelta) maxDelta = d
-          Row.fromSeq(row.toSeq.dropRight(1))
-        }
-        it += 1
-      }
-      phases = spark.createDataFrame(
-        java.util.Arrays.asList(localRows: _*), schema)
-    } else while (it < maxIter && maxDelta > tol) {
-      val updated = stepPlan(phases)
-      it += 1
-      val rdd = updated.rdd.localCheckpoint()
-      maxDelta = rdd
-        .map(row => math.abs(row.getDouble(dIdx)))
-        .fold(0.0)(math.max)
-      if (prevRdd != null) prevRdd.unpersist(blocking = false)
-      prevRdd = ckptRdd
-      ckptRdd = rdd
-      phases = spark.createDataFrame(rdd, updated.schema).drop("d")
-    }
-    releaseIn()
-    val outKeys = Seq("time_index", "ant") ++ extraKeys :+ "dir"
-    phases.select((outKeys.map(col) :+ col("phase")): _*)
-      .orderBy(outKeys.map(col): _*)
+    iterate(df, Seq("row_id") ++ keyCols ++ Seq("ant1", "ant2", "m_re",
+        "m_im", "v_re", "v_im", "w"), keyCols, maxIter, tol, detSum)(
+      solveLocalDirs(_, keyCols, extraKeys, maxIter, tol, detSum),
+      withG => {
+        val gp = CxCol(col("gp.gc"), col("gp.gs"))
+        val gq = CxCol(col("gq.gc"), col("gq.gs"))
+        val m = CxCol(col("m_re"), col("m_im"))
+        val vm = gp * m * gq.conj
+        val perDir = withG.select((Seq(col("x.row_id").as("row_id")) ++
+          keyCols.map(k => col(s"x.$k").as(k)) ++
+          Seq(col("x.ant1").as("ant1"), col("x.ant2").as("ant2"),
+            col("v_re"), col("v_im"), col("w"),
+            vm.re.as("vm_re"), vm.im.as("vm_im"))): _*)
+        val withR = perDir
+          .withColumn("r_re", col("v_re") - sum(col("vm_re")).over(rowWin))
+          .withColumn("r_im", col("v_im") - sum(col("vm_im")).over(rowWin))
+        val jhrTerm = col("w") *
+          (col("vm_re") * col("r_im") - col("vm_im") * col("r_re"))
+        // one-pass p/q scatter: the union form would re-run the gather
+        // join AND the shared-residual window once per side
+        scatter(withR, keyCols.map(col), keyCols, col("ant1"), col("ant2"),
+            jhrTerm, -jhrTerm, "jhr_c")
+      })
   }
 }

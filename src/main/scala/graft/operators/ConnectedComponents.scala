@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.core.Escalate
 
 /** Distributed connected components over a pair graph — the step from
   * near-duplicate PAIRS (t10) to duplicate CLUSTERS (t11) at corpus
@@ -45,27 +46,22 @@ object ConnectedComponents {
       .unionByName(pairs.select(col(c(1)).as("u"), col(c(0)).as("v")))
   }
 
-  /** Byte bound under which the round loop runs DRIVER-resident (round
-    * 14): each distributed round costs a localCheckpoint job + 2-3 keyed
-    * exchanges — pure overhead when the graph is model-sized (t11/t17/
-    * t53 measured 2-3 s of construction for ms of label arithmetic).
-    * Every loop value is an exact INTEGER combined by order-free ops
-    * (min, long sums, integer division), so the driver mirror is
-    * bit-identical at any evaluation order — no fp caveat at all. The
-    * gate is data-derived; a corpus-scale graph always exceeds it and
-    * keeps the distributed rounds (ConnectedComponentsSpec pins
-    * local ≡ distributed on the same graph). */
-  private def localMaxBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.ccLocalMaxBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-
-  /** Collect (u, v) long edges when the pinned relation fits the gate;
-    * None keeps the distributed loop. `edgeRows` is pin's count. */
+  /** Collect (u, v) long edges when the pinned relation fits the
+    * `Escalate.local` gate; None keeps the distributed loop. `edgeRows`
+    * is pin's count. The round loop runs DRIVER-resident below the gate
+    * (round 14): each distributed round costs a localCheckpoint job + 2-3
+    * keyed exchanges — pure overhead when the graph is model-sized
+    * (t11/t17/t53 measured 2-3 s of construction for ms of label
+    * arithmetic). Every loop value is an exact INTEGER combined by
+    * order-free ops (min, long sums, integer division), so the driver
+    * mirror is bit-identical at any evaluation order — no fp caveat at
+    * all (ConnectedComponentsSpec pins local ≡ distributed on the same
+    * graph). */
   private def edgesLocal(symC: DataFrame, edgeRows: Long)
       : Option[Array[(Long, Long)]] = {
     val fits = symC.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType) &&
-      edgeRows * 48L <= localMaxBytes(symC.sparkSession)
+      Escalate.local(symC.sparkSession, "cc.edges", edgeRows * 48L)
     if (!fits) None
     else Some(symC.collect().map(r => (r.getLong(0), r.getLong(1))))
   }
@@ -105,11 +101,10 @@ object ConnectedComponents {
   /** Long node ids of a one-column node frame, when collect-safe. The
     * count runs BEFORE the collect — the gate must bound the driver
     * transfer, not report it after the fact. */
-  private def nodesLocal(nodes: DataFrame, id: String, cap: Long)
-      : Option[Array[Long]] = {
+  private def nodesLocal(nodes: DataFrame, id: String): Option[Array[Long]] = {
     if (nodes.schema(id).dataType != org.apache.spark.sql.types.LongType)
       return None
-    if (nodes.count() * 24L > cap) None
+    if (!Escalate.local(nodes.sparkSession, "cc.nodes", nodes.count() * 24L)) None
     else Some(nodes.select(col(id)).collect().map(_.getLong(0)))
   }
 
@@ -120,7 +115,7 @@ object ConnectedComponents {
     val id = nodes.columns.head
     val (symC, nEdges) = pin(sym)
     edgesLocal(symC, nEdges).flatMap { edges =>
-      nodesLocal(nodes, id, localMaxBytes(nodes.sparkSession)).map { ns =>
+      nodesLocal(nodes, id).map { ns =>
         var m = scala.collection.mutable.HashMap(ns.map(n => n -> n): _*)
         for (_ <- 1 to rounds) {
           val nm = m.clone()
@@ -174,7 +169,7 @@ object ConnectedComponents {
     val n = nodes.select(col(id).as("cid"))
     val (symC, nEdges) = pin(sym)
     edgesLocal(symC, nEdges).flatMap { edges =>
-      nodesLocal(n, "cid", localMaxBytes(nodes.sparkSession)).map { ns =>
+      nodesLocal(n, "cid").map { ns =>
         // all-integer arithmetic (long sums order-free, positive integral
         // divisions) — bit-identical to the distributed rounds
         val deg = scala.collection.mutable.HashMap[Long, Long]()
@@ -221,7 +216,7 @@ object ConnectedComponents {
     val id = nodes.columns.head
     val (symC, nEdges) = pin(sym)
     edgesLocal(symC, nEdges).flatMap { edges =>
-      nodesLocal(nodes, id, localMaxBytes(nodes.sparkSession)).map { ns =>
+      nodesLocal(nodes, id).map { ns =>
         var m = scala.collection.mutable.HashMap(ns.map(n => n -> n): _*)
         for (_ <- 1 to rounds) {
           val nm = m.clone()

@@ -61,7 +61,7 @@ object Gridder {
     // The hint respects a session that disabled broadcasting
     // (threshold ≤ 0) — the escape hatch for an image past driver memory
     // (round-14 ADVICE; same gate as WStack.gridBcast).
-    val g = if (Calibrate.broadcastThreshold(s) > 0) broadcast(grid) else grid
+    val g = if (graft.core.Escalate.broadcastThreshold(s) > 0) broadcast(grid) else grid
     pts.repartition(col("row_id"))
       .crossJoin(ti).crossJoin(tj)
       .withColumn("gu", col("pu") + col("oi"))

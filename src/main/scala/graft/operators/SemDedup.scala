@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Escalate
 
 /** SemDeDup — semantic deduplication by cluster-then-prune (Abbas et al.
   * 2023, "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -112,8 +113,9 @@ object SemDedup {
   /** Size-aware nearest-centroid assignment — the registered default for
     * every flat-semantics surface (t29/e20 and the IVF ingest faces).
     * While the seed LUT fits under `spark.sql.autoBroadcastJoinThreshold`
-    * (computed from the exactly known k·d, the `Calibrate.gridBroadcastable`
-    * idiom) it is [[assign]] verbatim: one one-row broadcast LUT, zero
+    * (computed from the exactly known k·d, read through
+    * `graft.core.Escalate` and recorded as a `semdedup.seeds` decision,
+    * flat or chunked) it is [[assign]] verbatim: one one-row broadcast LUT, zero
     * shuffle. Past the threshold it escalates to [[assignChunked]] — still
     * EXACT (min over chunk minima = the flat argmin), so the answer never
     * depends on cluster config; only the plan shape does. The semantic
@@ -142,10 +144,13 @@ object SemDedup {
     // JOIN side" — it must NOT mean "collect a corpus-proportional seed
     // set to the driver": size against the Spark DEFAULT (10 MB) instead,
     // so the flat path stays driver-safe under any session config.
-    val thr0 = Calibrate.broadcastThreshold(spark)
+    val thr0 = Escalate.broadcastThreshold(spark)
     val thr = if (thr0 > 0) thr0 else 10L * 1024 * 1024
     val bytes = seedBytes(k, dMin)
-    if (bytes <= thr) assign(corpus, seeds)
+    val flat = bytes <= thr
+    Escalate.record(spark, Escalate.Decision("semdedup.seeds",
+      if (flat) "flat" else "chunked", bytes, thr))
+    if (flat) assign(corpus, seeds)
     else {
       val rowBytes = 8L * (dMin + 1) + 16L
       val perChunk = thr / rowBytes // rows per UNDER-threshold chunk

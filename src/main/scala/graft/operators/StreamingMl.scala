@@ -371,7 +371,7 @@ object StreamingMl {
     // an artificially small TEST threshold (the SemDedupSpec escalation
     // rig) must not reject the √k coarse sets the two-level faces are
     // designed around
-    val thr = math.max(Calibrate.broadcastThreshold(spark), 4L << 20)
+    val thr = math.max(graft.core.Escalate.broadcastThreshold(spark), 4L << 20)
     if (seeds.nonEmpty) {
       val bytes = SemDedup.seedBytes(seeds.length.toLong, seeds.head._2.length)
       require(bytes <= thr,

@@ -30,7 +30,7 @@ object WStack {
     * gather degrades to the pre-round-13 shuffle join instead of
     * collecting the grid to the driver (round-14 ADVICE). */
   private def gridBcast(grid: DataFrame): DataFrame =
-    if (Calibrate.broadcastThreshold(grid.sparkSession) > 0) broadcast(grid)
+    if (graft.core.Escalate.broadcastThreshold(grid.sparkSession) > 0) broadcast(grid)
     else grid
 
   /** Row_id-hash repartition at the session's shuffle width (AQE

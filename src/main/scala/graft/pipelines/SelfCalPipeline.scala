@@ -171,7 +171,8 @@ object SelfCalPipeline {
     //    The gain grid is (n_utime/solint) × n_ant — broadcast it when
     //    the session threshold allows, exactly like the solver's gather.
     val nGrid = gains.count()
-    val bcast = Calibrate.gridBroadcastable(spark, nGrid, 4)
+    val bcast = graft.core.Escalate.broadcastable(spark, "selfcal.gains",
+      graft.core.Escalate.rowBytes(nGrid, 4))
     val g = Calibrate.gatherJoin(
       in.select("row_id", "chan", "time_index", "ant1", "ant2",
         "m_re", "m_im", "v_re", "v_im"),

@@ -436,11 +436,6 @@ object CalibrationQ {
       val in = base.select(col("time_index"), col("ant1"), col("ant2"),
         col("m_re"), col("m_im"),
         vm.re.as("v_re"), vm.im.as("v_im"), col("wt").as("w"))
-      // checkEvery stays 1: each iteration broadcasts the grid, and a
-      // broadcast of an UNmaterialized grid re-executes its stacked
-      // join layers (measured 40× blowup at checkEvery = 3) — the
-      // per-iteration localCheckpoint is what keeps every broadcast a
-      // cache read
       Calibrate.gaussNewtonPhaseOnly(in, maxIter = 15, tol = 1e-12)
     })
 }

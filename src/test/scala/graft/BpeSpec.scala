@@ -93,9 +93,9 @@ class BpeSpec extends AnyFunSuite {
         .sortBy(t => (t._1, t._2))
     val local = run() // default gate: corpus is tiny, driver loop
     val dist = try {
-      s.conf.set("spark.graft.bpeLocalMaxBytes", "0")
+      s.conf.set("spark.graft.localMaxBytes", "0")
       run()
-    } finally s.conf.unset("spark.graft.bpeLocalMaxBytes")
+    } finally s.conf.unset("spark.graft.localMaxBytes")
     assert(local === dist)
   }
 

@@ -43,6 +43,7 @@ class CalibrateSpec extends AnyFunSuite {
   }
 
   test("chan-resolved solve: shuffle-degraded path (threshold -1) matches the broadcast path") {
+    import graft.core.Escalate
     import spark.implicits._
     // 3 times x 4 antennas x 2 chans, chan-dependent known phases
     val rows = for {
@@ -60,18 +61,27 @@ class CalibrateSpec extends AnyFunSuite {
     }
     val in = rows.toDF("time_index", "ant1", "ant2", "chan",
       "m_re", "m_im", "v_re", "v_im", "w")
-    def solve(): Map[(Long, Long, Long), Double] =
-      Calibrate.gaussNewtonPhaseOnly(in, maxIter = 25, tol = 1e-14,
-          extraKeys = Seq("chan"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
-        .toMap
-    val bcastRun = solve()
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val shuffleRun = try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      solve()
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    // the distributed solve on both sides (the problem is far under the
+    // driver-resident gate), so the comparison is the broadcast grid loop
+    // against the shuffle checkpoint loop
+    def solve(): (Map[(Long, Long, Long), Double], Seq[String]) = {
+      val (m, gates) = TestSpark.gates(
+        Calibrate.gaussNewtonPhaseOnly(in, maxIter = 25, tol = 1e-14,
+            extraKeys = Seq("chan"))
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getDouble(3))
+          .toMap)
+      (m, gates.map(_.toString))
+    }
+    val (bcastRun, bcastGates) =
+      TestSpark.withConf(Escalate.LocalMaxBytesKey -> "0")(solve())
+    val (shuffleRun, shuffleGates) = TestSpark.withConf(
+      Escalate.LocalMaxBytesKey -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(solve())
+    assert(bcastGates ===
+      Seq("calibrate.solve=distributed", "calibrate.grid=broadcast"))
+    assert(shuffleGates ===
+      Seq("calibrate.solve=distributed", "calibrate.grid=shuffle"))
     assert(bcastRun.keySet === shuffleRun.keySet)
     // identical iteration algebra either way — values agree to fp noise
     val maxDiff = bcastRun.map { case (k, v) =>
@@ -124,9 +134,9 @@ class CalibrateSpec extends AnyFunSuite {
           -> r.getDouble(4))
     val localDie = solveDie(); val localDirs = solveDirs()
     val (distDie, distDirs) = try {
-      spark.conf.set("spark.graft.solveLocalMaxBytes", "0")
+      spark.conf.set("spark.graft.localMaxBytes", "0")
       (solveDie(), solveDirs())
-    } finally spark.conf.unset("spark.graft.solveLocalMaxBytes")
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
     assert(localDie === distDie) // exact double equality, order included
     assert(localDirs === distDirs)
   }

@@ -77,9 +77,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     val local = all()
     val dist = try {
-      spark.conf.set("spark.graft.ccLocalMaxBytes", "0")
+      spark.conf.set("spark.graft.localMaxBytes", "0")
       all()
-    } finally spark.conf.unset("spark.graft.ccLocalMaxBytes")
+    } finally spark.conf.unset("spark.graft.localMaxBytes")
     assert(local === dist)
   }
 

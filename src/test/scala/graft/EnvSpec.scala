@@ -33,6 +33,9 @@ class EnvSpec extends AnyFunSuite {
       assert(c("spark.sql.session.timeZone") === "UTC")
       assert(c("spark.sql.legacy.parquet.nanosAsLong") === "true")
       assert(c("spark.ui.enabled") === "false")
+      assert(c("spark.log.level") === "WARN")
+      assert(conf(Map("SPARK_GRAFT_MASTER" -> master, "SPARK_GRAFT_LOG" -> "INFO"))
+        ("spark.log.level") === "INFO")
     }
   }
 

@@ -580,17 +580,20 @@ class PlanSpec extends AnyFunSuite {
   test("g06/g09: the gain-grid gather is size-aware — no driver-sized broadcast build past the threshold") {
     import org.apache.spark.sql.functions._
     import graft.operators.Calibrate
+    import graft.core.Escalate
     // decision function: a (time, ant) phase grid broadcasts; the
     // reference's full (time, ant, chan, dir) grid at survey scale (e.g.
     // 4e3 times x 64 ants x 4e3 chans x 8 dirs ~ 8e9 rows) must NOT be
     // collected to the driver
-    assert(Calibrate.gridBroadcastable(spark, gridRows = 1000L, nCols = 5))
-    assert(!Calibrate.gridBroadcastable(spark, gridRows = 8L * 1000 * 1000 * 1000,
-      nCols = 6))
+    def gridBroadcasts(gridRows: Long, nCols: Int): Boolean =
+      Escalate.broadcastable(spark, "calibrate.grid",
+        Escalate.rowBytes(gridRows, nCols))
+    assert(gridBroadcasts(gridRows = 1000L, nCols = 5))
+    assert(!gridBroadcasts(gridRows = 8L * 1000 * 1000 * 1000, nCols = 6))
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      assert(!Calibrate.gridBroadcastable(spark, gridRows = 10L, nCols = 5))
+      assert(!gridBroadcasts(gridRows = 10L, nCols = 5))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 
     // physical shape of the gather join the solver builds: with the hint

@@ -25,4 +25,23 @@ object TestSpark {
   }
 
   val sf: String = "/root/testdata/sf0.001"
+
+  private lazy val metrics = graft.core.Env.taskMetrics(spark)
+
+  /** Run `f` and return its value with the `Escalate` decisions it posted. */
+  def gates[A](f: => A): (A, Seq[graft.core.Escalate.Decision]) = {
+    val m = metrics.span(f)
+    (m.value, m.gates)
+  }
+
+  /** Run `f` with the session confs `kv` set, restoring the previous
+    * values (or unsetting) afterwards. */
+  def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
