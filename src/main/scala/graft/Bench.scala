@@ -9,6 +9,13 @@ package graft
   * first measured query isn't charged for it.
   */
 object Bench {
+  /** One query's record: min-of-2 seconds with the construction share and
+    * plan findings of that run; spill summed and peak maxed over both
+    * runs; the distinct gate paths of both. */
+  private final case class Result(name: String, sec: Double, construct: Double,
+                                  runtime: Explain.Runtime, spill: Long,
+                                  peak: Long, gates: String)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.Env.session(32)
@@ -41,17 +48,22 @@ object Bench {
     val calibStart = math.min(calib(), calib())
     // two timed runs per query, report the min — single-run wall-clock at
     // this scale is dominated by scheduler jitter. A failed run yields the
-    // -1 sentinel (never a phantom elapsed time).
-    def once(q: Q): Option[Double] = {
-      val t0 = System.nanoTime()
-      try {
-        q.fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-        None
+    // -1 sentinel (never a phantom elapsed time). Each run is its own span,
+    // and its time splits into construction (`q.fn`: building the
+    // DataFrame, including any eager staging jobs) and the sink.
+    def once(q: Q): graft.core.Env.Span[Option[(Double, Double)]] = // (sec, construct)
+      metrics.span {
+        val t0 = System.nanoTime()
+        try {
+          val df = q.fn(spark, sfDir)
+          val construct = (System.nanoTime() - t0) / 1e9
+          df.write.mode("overwrite").format("noop").save()
+          Some(((System.nanoTime() - t0) / 1e9, construct))
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+          None
+        }
       }
-    }
     // seeded with the post-warmup healthy topology
     val guard = graft.core.Env.quorum(spark)
     // optional comma-separated name filter for local iteration
@@ -63,15 +75,20 @@ object Bench {
     }
     val results = selected.zipWithIndex.map { case (q, i) =>
       guard.beforeQuery(i)
-      val m = metrics.span {
-        val first = once(q)
-        guard.await()
-        (first, once(q)) match {
-          case (Some(a), Some(b)) => math.min(a, b)
-          case _ => -1.0
-        }
+      val first = once(q)
+      guard.await()
+      val second = once(q)
+      // time, construction and plan findings come from the faster run;
+      // spill, peak and gates cover both, as they always have
+      val (sec, construct, runtime) = (first.value, second.value) match {
+        case (Some((s1, c1)), Some((s2, c2))) =>
+          if (s1 <= s2) (s1, c1, first.runtime) else (s2, c2, second.runtime)
+        case _ => (-1.0, -1.0, first.runtime)
       }
-      (q.name, m.value, m.spillBytes, m.peakBytes, m.gatePaths)
+      Result(q.name, sec, construct, runtime,
+        first.spillBytes + second.spillBytes,
+        math.max(first.peakBytes, second.peakBytes),
+        (first.gates ++ second.gates).map(_.toString).distinct.mkString(","))
     }
     val calibEnd = math.min(calib(), calib())
     def fmt(v: Double) = if (v < 0) "-1" else f"$v%.3f"
@@ -79,20 +96,21 @@ object Bench {
     // of stdout, so whatever is truncated is the cheap head — the slow
     // queries (the ones a regression diagnosis needs) always land inside
     // the captured window, immediately before the headline object.
-    val byTime = results.sortBy { r => if (r._2 < 0) Double.MaxValue else r._2 }
-    val qs = byTime.map(r => "\"" + r._1 + "\":" + fmt(r._2))
+    val byTime = results.sortBy { r => if (r.sec < 0) Double.MaxValue else r.sec }
+    val qs = byTime.map(r => "\"" + r.name + "\":" + fmt(r.sec))
       .mkString("{", ",", "}")
     // spill map carries only offenders (empty object when no query spilled
     // — the expected state); peak is the max single-task execution memory
-    val spillMap = results.filter(_._3 > 0)
-      .map(r => "\"" + r._1 + "\":" + r._3)
+    val spillMap = results.filter(_.spill > 0)
+      .map(r => "\"" + r.name + "\":" + r.spill)
       .mkString("{", ",", "}")
-    val peakMax = if (results.isEmpty) 0L else results.map(_._4).max
-    val failed = results.count(_._2 < 0)
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val peakMax = if (results.isEmpty) 0L else results.map(_.peak).max
+    val failed = results.count(_.sec < 0)
+    val spilled = results.count(_.spill > 0)
+    val total = results.map(_.sec).filter(_ >= 0).sum
     val calibJson = s""""calib_start_sec":${fmt(calibStart)},"calib_end_sec":${fmt(calibEnd)}"""
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":$failed,"spilled":${results.count(_._3 > 0)},"spill_bytes":$spillMap,"peak_task_mem":$peakMax,$calibJson,"sf":"$sfDir","queries":$qs}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":$failed,"spilled":$spilled,"spill_bytes":$spillMap,"peak_task_mem":$peakMax,$calibJson,"sf":"$sfDir","queries":$qs}"""
     // The driver captures the TAIL of stdout, so the long per-query line
     // goes first (and to bench_results.json), and a SHORT headline object
     // is the very LAST stdout line — it survives truncation and parses.
@@ -104,11 +122,16 @@ object Bench {
     // self-contained JSON line; ascending by time so the expensive
     // queries — the ones a regression diagnosis needs — sit nearest the
     // end of stdout, inside any tail window. The one-line headline
-    // object stays LAST. A query that consulted a size gate also says
-    // which path each gate took ("gates":"calibrate.solve=driver").
-    byTime.foreach { case (k, v, _, _, g) =>
-      val gates = if (g.isEmpty) "" else s""","gates":"$g""""
-      println(s"""{"q":"$k","sec":${fmt(v)}$gates}""")
+    // object stays LAST. Each line also splits the time: "construct" is
+    // the q.fn share, and "plans" counts the executed plans of that same
+    // run, with their runtime AQE findings ("aqe", see
+    // Explain.runtimeFindings) when any is non-zero. A query that
+    // consulted a size gate says which path each gate took
+    // ("gates":"calibrate.solve=driver").
+    byTime.foreach { r =>
+      val aqe = if (r.runtime.aqe.isEmpty) "" else s""","aqe":"${r.runtime.aqe}""""
+      val gates = if (r.gates.isEmpty) "" else s""","gates":"${r.gates}""""
+      println(s"""{"q":"${r.name}","sec":${fmt(r.sec)},"construct":${fmt(r.construct)},"plans":${r.runtime.plans}$aqe$gates}""")
     }
     // only FULL runs update the committed record — a SPARK_GRAFT_ONLY
     // filtered iteration run must not clobber the 170+-query baseline
@@ -118,6 +141,6 @@ object Bench {
     } catch { case _: Throwable => }
     spark.stop()
     println(
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":$failed,"spilled":${results.count(_._3 > 0)},"peak_task_mem":$peakMax,$calibJson,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":$failed,"spilled":$spilled,"peak_task_mem":$peakMax,$calibJson,"sf":"$sfDir"}""")
   }
 }

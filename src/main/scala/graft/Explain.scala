@@ -1,12 +1,20 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 
 /** Plan inspector: prints the formatted physical plan of one registered
   * query, plus the generated-code statistics (`debugCodegen`) that show
   * whether the hot path stays inside whole-stage codegen and how large
   * each generated method is (methods past the 8 KB JIT threshold or the
   * 64 KB javac limit fall out of compilation and run interpreted).
+  * It owns plan auditing: the planning-time registry audit
+  * ([[auditFindings]]) and the execution-time AQE findings
+  * ([[runtimeFindings]]) that Bench reports per query.
   *
   * Usage: runMain graft.Explain <queryName> [sfDir] [codegen]
   */
@@ -119,6 +127,61 @@ object Explain {
           Finding(q.name, Nil, Nil, Nil, Some(e.getMessage))
       }
     }
+  }
+
+  /** Execution-time AQE findings of final executed plans — the runtime
+    * complement of [[auditFindings]], which plans with AQE OFF and so
+    * cannot see the decisions AQE takes from observed shuffle statistics:
+    *  - `spExch`: ShuffleExchange nodes whose output partitioning is
+    *    SinglePartition (legit only for one-long-per-partition count/sum
+    *    merges — the frozen AuditSpec class);
+    *  - `aqeOne`: AQEShuffleRead nodes coalesced to EXACTLY ONE partition
+    *    spec — the runtime funnel (the t44/q15 serialization class);
+    *  - `skew`: sort-merge/shuffled-hash joins with isSkewJoin = true
+    *    (AQE's skew mitigation engaged — information, not a defect);
+    *  - `plans`: how many executed plans were walked (driver-loop solvers
+    *    and pipelines run many per query).
+    * Counts only: `Env.TaskMetrics` sums them per span without holding on
+    * to any plan. */
+  final case class Runtime(plans: Int, spExch: Int, aqeOne: Int, skew: Int) {
+    def +(o: Runtime): Runtime = Runtime(plans + o.plans, spExch + o.spExch,
+      aqeOne + o.aqeOne, skew + o.skew)
+    /** `sp_exch=…,aqe_one=…,skew=…`, or empty when all three are 0. */
+    def aqe: String =
+      if (spExch + aqeOne + skew == 0) ""
+      else s"sp_exch=$spExch,aqe_one=$aqeOne,skew=$skew"
+  }
+
+  object Runtime {
+    val Zero: Runtime = Runtime(0, 0, 0, 0)
+  }
+
+  /** [[Runtime]] findings of one final executed plan, resolving the
+    * adaptive tree (AdaptiveSparkPlanExec.executedPlan, stages via
+    * QueryStageExec.plan). */
+  def runtimeFindings(plan: SparkPlan): Runtime = {
+    var spExch, aqeOne, skew = 0
+    def walk(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case r: AQEShuffleReadExec =>
+        if (r.partitionSpecs.length == 1) aqeOne += 1
+        walk(r.child)
+      case j: SortMergeJoinExec =>
+        if (j.isSkewJoin) skew += 1
+        j.children.foreach(walk)
+      case j: ShuffledHashJoinExec =>
+        if (j.isSkewJoin) skew += 1
+        j.children.foreach(walk)
+      case e: ShuffleExchangeExec =>
+        if (e.outputPartitioning == SinglePartition) spExch += 1
+        e.children.foreach(walk)
+      case other =>
+        other.children.foreach(walk)
+        other.subqueries.foreach(walk)
+    }
+    walk(plan)
+    Runtime(1, spExch, aqeOne, skew)
   }
 
   private def audit(spark: SparkSession, sfDir: String): Unit = {

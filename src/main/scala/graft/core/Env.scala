@@ -6,12 +6,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerExecutorAdded, SparkListenerExecutorRemoved,
   SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
+import graft.Explain
 
 /** The harness layer of every main: the one session builder
   * ([[Env.session]]), the executor-quorum guard and per-query hygiene of
-  * the sequential mains ([[Env.Quorum]]), the per-task spill/peak and
-  * gate-decision listener ([[Env.TaskMetrics]]) and the `SPARK_GRAFT_*`
+  * the sequential mains ([[Env.Quorum]]), the per-task spill/peak,
+  * gate-decision and executed-plan listener ([[Env.TaskMetrics]]) and the
+  * `SPARK_GRAFT_*`
   * env-var plumbing they read. The env vars are local-iteration only — the driver
   * never sets them. `ExtensionsCheck` is the one main that builds its own
   * session: it tests a static `spark.sql.extensions` conf in a fresh JVM,
@@ -59,6 +63,10 @@ object Env {
     "spark.excludeOnFailure.stage.maxFailedExecutorsPerNode" -> "1000",
     "spark.excludeOnFailure.application.maxFailedExecutorsPerNode" -> "1000")
 
+  /** The `spark.log.level` of a session: `SPARK_GRAFT_LOG`, default WARN. */
+  def logLevel(env: Map[String, String]): String =
+    env.getOrElse("SPARK_GRAFT_LOG", "WARN")
+
   /** Every conf a harness session sets, in the order it is set (a later
     * entry overrides an earlier one of the same key). Pure in `env`:
     *  - master `SPARK_GRAFT_MASTER`, else `local[cpus]`, where cpus is
@@ -87,7 +95,7 @@ object Env {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.ui.enabled" -> "false",
-      "spark.log.level" -> env.getOrElse("SPARK_GRAFT_LOG", "WARN")) ++
+      "spark.log.level" -> logLevel(env)) ++
       extra ++
       (if (master.startsWith("local-cluster")) LocalClusterExclusion else Nil) ++
       extraConf(env)
@@ -214,15 +222,13 @@ object Env {
     q
   }
 
-  /** One measured span: wall seconds of the body, bytes its tasks spilled
-    * (memory + disk), the largest single-task peak execution memory and
-    * the `Escalate` decisions its gates posted, in order. */
-  final case class Span[A](value: A, wallS: Double, spillBytes: Long,
-                           peakBytes: Long, gates: Seq[Escalate.Decision]) {
-    /** Distinct decisions as `gate=path,...` in first-seen order; empty
-      * when no gate was consulted. */
-    def gatePaths: String = gates.map(_.toString).distinct.mkString(",")
-  }
+  /** One measured span: the body's value, bytes its tasks spilled
+    * (memory + disk), the largest single-task peak execution memory, the
+    * `Escalate` decisions its gates posted, in order, and the runtime AQE
+    * findings summed over every plan it executed. */
+  final case class Span[A](value: A, spillBytes: Long, peakBytes: Long,
+                           gates: Seq[Escalate.Decision],
+                           runtime: Explain.Runtime)
 
   /** Executor-memory instrumentation (round 10): per-task spill bytes and
     * peak execution memory accumulate in one listener and are read per
@@ -231,11 +237,15 @@ object Env {
     * at 100 TB. Deltas are read per span, so a reused session never
     * double-counts (ADVICE r12). The same listener collects the
     * `Escalate` decisions, so each span also says which path every size
-    * gate it consulted took. */
-  final class TaskMetrics(drain: () => Unit) extends SparkListener {
+    * gate it consulted took, and — as a QueryExecutionListener — walks
+    * each successful query's final plan with [[Explain.runtimeFindings]],
+    * keeping only the counts. */
+  final class TaskMetrics(drain: () => Unit)
+      extends SparkListener with QueryExecutionListener {
     private val spill = new AtomicLong
     private val peak = new AtomicLong
     private val gates = new ConcurrentLinkedQueue[Escalate.Decision]
+    private val runtime = new ConcurrentLinkedQueue[Explain.Runtime]
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case d: Escalate.Decision => gates.add(d)
@@ -250,26 +260,31 @@ object Env {
       }
     }
 
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      runtime.add(Explain.runtimeFindings(qe.executedPlan))
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+
     /** Run `f` and measure it. The async listener bus is drained on BOTH
-      * sides, outside the wall time, so the attribution is exact: task-end
-      * events from before the span can neither land inside it nor be
-      * clobbered by the peak reset, and none of its own arrive late. */
+      * sides, outside any time `f` takes itself, so the attribution is
+      * exact: task-end events from before the span can neither land inside
+      * it nor be clobbered by the peak reset, and none of its own arrive
+      * late. */
     def span[A](f: => A): Span[A] = {
       drain()
-      val s0 = spill.get(); peak.set(0L); gates.clear()
-      val t0 = System.nanoTime()
+      val s0 = spill.get(); peak.set(0L); gates.clear(); runtime.clear()
       val a = f
-      val wall = (System.nanoTime() - t0) / 1e9
       drain()
-      Span(a, wall, spill.get() - s0, peak.get(), gates.asScala.toList)
+      Span(a, spill.get() - s0, peak.get(), gates.asScala.toList,
+        runtime.asScala.foldLeft(Explain.Runtime.Zero)(_ + _))
     }
   }
 
-  /** Attach a [[TaskMetrics]] listener to `spark`. */
+  /** Attach a [[TaskMetrics]] listener to both of `spark`'s buses. */
   def taskMetrics(spark: SparkSession): TaskMetrics = {
     val sc = spark.sparkContext
     val tm = new TaskMetrics(() => org.apache.spark.graft.Listeners.drain(sc))
     sc.addSparkListener(tm)
+    spark.listenerManager.register(tm)
     tm
   }
 

@@ -10,7 +10,8 @@ import graft.core.Escalate
   * near-duplicate pairs are searched ONLY within a cluster, so the
   * quadratic pair blowup is bounded by the cluster size: with the cluster
   * count k grown in proportion to the corpus (n/k bounded), total pair
-  * volume stays linear in n. ScaleProbe measures exactly that contract.
+  * volume stays linear in n. The t29 oracle and PlanSpec's k-independent
+  * plan guard pin that contract; BASELINE.md records the measured growth.
   *
   * Determinism contract (the t10/e05 idioms): vectors are 1e-6-quantized
   * integer arrays, distances and dots are exact integer sums, the cosine

@@ -74,7 +74,7 @@ object ImagingPipeline {
     * only the (2·psfHalf+1)² pixels the collect reads is value-identical
     * and drops the PSF job's trig volume by nx·ny/(2·psfHalf+1)²
     * (48×48/49 ≈ 47× on the registered p02 geometry). */
-  private[graft] def psfFromGrids(grids: DataFrame, cfg: Config)
+  private def psfFromGrids(grids: DataFrame, cfg: Config)
       : (Array[Double], Double) = {
     val h = cfg.psfHalf
     val cx = cfg.nx / 2; val cy = cfg.ny / 2
@@ -101,7 +101,7 @@ object ImagingPipeline {
     * when the caller literals re/im to (1, 0), and adding aggregate
     * columns never moves an existing column's value, so both consumers
     * read bit-identical grids. */
-  private[graft] def combinedGrids(vis: DataFrame, cfg: Config)
+  private def combinedGrids(vis: DataFrame, cfg: Config)
       : DataFrame = {
     val s = vis.sparkSession
     import s.implicits._

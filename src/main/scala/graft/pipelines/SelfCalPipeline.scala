@@ -82,7 +82,7 @@ object SelfCalPipeline {
     * the groupBy predict + a row_id SMJ here and spilled 3.8 GB + 1.2 GB
     * in 4 GB executors — this shape cannot spill (nothing data-sized is
     * ever sorted or hashed). */
-  private[graft] def corruptedVis(spark: SparkSession, ms: MsDataset.Ms,
+  private def corruptedVis(spark: SparkSession, ms: MsDataset.Ms,
                                   skyModelPath: String, solint: Int,
                                   mainRows: Option[Long] = None)
       : DataFrame = {
@@ -104,9 +104,9 @@ object SelfCalPipeline {
     // replica) buys full-width execution for the whole cycle (measured:
     // the 4 GB-executor sink sort stops spilling, iterations
     // parallelize).
-    // MAIN's count is metadata-cheap on parquet but still a job — callers
-    // that already know it (ScaleProbe probes corruptedVis AND cycle in
-    // one session) thread it through instead of re-counting
+    // MAIN's count is metadata-cheap on parquet but still a job — `run`
+    // threads through the count its caller already took (PipelineQ's
+    // ensureMs) instead of re-counting
     val width = graft.core.Env.scaledWidth(spark,
       mainRows.getOrElse(ms.main.count()), 32768L)
     val rows = ms.main.join(broadcast(times), "TIME")

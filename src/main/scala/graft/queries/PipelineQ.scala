@@ -46,7 +46,7 @@ object PipelineQ {
     * — the count is already in the fingerprint, so callers thread it into
     * the pipelines instead of re-counting MAIN (round-13: one scan job
     * saved per pipeline invocation). */
-  private[graft] def ensureMs(spark: SparkSession, dir: String): (String, Long) = {
+  private def ensureMs(spark: SparkSession, dir: String): (String, Long) = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val msDir = s"/tmp/graft_p01_ms_$tag"
     val marker = java.nio.file.Paths.get(s"$msDir/_GRAFT_MS_ROWS")
@@ -69,7 +69,7 @@ object PipelineQ {
 
   /** Fixed broadcast-sized sky model: three WSClean point components
     * inside the beam cube's footprint (the fixture spans ±1.5 deg). */
-  private[graft] def ensureSkyModel(): String = {
+  private def ensureSkyModel(): String = {
     val f = new java.io.File("/tmp/graft_p01_sky.txt")
     if (!f.exists()) {
       val w = new java.io.PrintWriter(f)
@@ -84,7 +84,7 @@ object PipelineQ {
     f.getAbsolutePath
   }
 
-  private[graft] def ensureBeam(): String = {
+  private def ensureBeam(): String = {
     new java.io.File("/tmp/graft_p01_beam").mkdirs()
     val schema = "/tmp/graft_p01_beam/beam_$(corr)_$(reim).fits"
     graft.io.BeamFixture.ensureQuad(schema)
@@ -94,7 +94,7 @@ object PipelineQ {
   /** p02 imaging geometry: a 48×48 pixel field, 4 w-planes, 4×4 facets.
     * Image/PSF work is dimension-sized (pixels × grid cells, constant in
     * data); only the vis table scales. */
-  private[graft] val ImgCfg = graft.pipelines.ImagingPipeline.Config(
+  private val ImgCfg = graft.pipelines.ImagingPipeline.Config(
     nx = 48, ny = 48, cell = 1.0 / 48,
     taps = graft.queries.GriddingQ.Taps,
     nPlanes = 4, wMax = 0.5, eta = 1e-2,
@@ -102,7 +102,7 @@ object PipelineQ {
 
   /** Three point sources at interior facet pixels (facet borders at
     * multiples of 12). */
-  private[graft] val ImgSources = Seq((33, 15, 3.0), (9, 38, 2.0),
+  private val ImgSources = Seq((33, 15, 3.0), (9, 38, 2.0),
     (22, 22, 1.0))
 
   /** Data-scaled visibility table for the imaging cycle, derived from the

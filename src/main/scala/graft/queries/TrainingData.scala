@@ -805,8 +805,8 @@ object TrainingData {
     //    candidate pairs per doc, bounded), and the probe→code join keys
     //    on the code — ONE code-keyed shuffle of two linear relations (at test
     //    scale the smaller side broadcasts instead; both plans keep
-    //    candidate volume linear in the corpus, ScaleProbe's e02 evidence
-    //    covers the same bucket geometry).
+    //    candidate volume linear in the corpus — the e02 bucket geometry,
+    //    whose fixed-vs-scaled width growth BASELINE.md records).
     Q("t10_embed_neardup",
       s"""WITH $neardupCtesSql
          |SELECT dot.cid_a, dot.cid_b,

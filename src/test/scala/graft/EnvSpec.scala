@@ -6,7 +6,8 @@ import graft.core.Env
 
 /** Pins the conf of [[Env.session]], the harness session of every main
   * but `ExtensionsCheck`, through its pure conf list (no session starts),
-  * and keeps it the only session builder in `src/main`. */
+  * and keeps it the only session builder in `src/main`; and pins the
+  * runtime plan findings [[Env.TaskMetrics]] reports per span. */
 class EnvSpec extends AnyFunSuite {
   private def conf(env: Map[String, String], cpus: Int = 32,
                    extra: Seq[(String, String)] = Nil): Map[String, String] =
@@ -64,6 +65,26 @@ class EnvSpec extends AnyFunSuite {
     val bad = intercept[IllegalArgumentException](
       conf(Map("SPARK_GRAFT_EXTRA_CONF" -> "spark.a=1;oops")))
     assert(bad.getMessage.contains("'oops'"))
+  }
+
+  test("a span counts the executed plans and their runtime AQE findings") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    val spark = TestSpark.spark
+    def sink(df: DataFrame) = TestSpark.withConf("spark.sql.adaptive.enabled" -> "true") {
+      TestSpark.span(df.write.mode("overwrite").format("noop").save()).runtime
+    }
+    val global = sink(spark.range(0, 1000, 1, 4).agg(sum("id")))
+    assert(global.plans === 1, global)
+    assert(global.spExch >= 1, global)
+    val coalesced = sink(spark.range(0, 100, 1, 4).repartition(4)
+      .groupBy(col("id") % 3).count())
+    assert(coalesced.aqeOne >= 1, coalesced)
+    val projection = sink(spark.range(0, 100, 1, 4).select(col("id") * 2))
+    assert(projection.plans === 1, projection)
+    assert((projection.spExch, projection.aqeOne, projection.skew) === ((0, 0, 0)),
+      projection)
+    assert(projection.aqe === "")
   }
 
   test("src/main builds sessions only in Env.session and ExtensionsCheck") {

@@ -36,8 +36,9 @@ class EscalateSpec extends AnyFunSuite {
     TestSpark.gates(q.fn(spark, TestSpark.sf).collect().toSeq.sortBy(_.toString))
   }
 
-  /** Every row under every setting, after asserting the branch it took. */
-  private lazy val results: Map[String, Seq[Seq[Row]]] =
+  /** Every row under every setting, after asserting the branch it took,
+    * with the distinct `gate=path` decisions of each run. */
+  private lazy val runs: Map[String, Seq[(Seq[Row], Seq[String])]] =
     (exact :+ g06).map { name =>
       name -> settings.map { case (confs, loopPath, gridPath) =>
         val (rows, decisions) = TestSpark.withConf(confs: _*)(run(name))
@@ -47,7 +48,8 @@ class EscalateSpec extends AnyFunSuite {
         assert(loops.nonEmpty, s"no loop gate consulted — $at")
         // a loop runs on the driver only when every gate it consults says
         // so: connected components asks the edge gate, then the node gate
-        // (an empty edge set fits even a zero limit, as t11's does here)
+        // (an empty edge set fits even a zero limit, as t11's and t17's
+        // do at sf0.001 — they distribute the node loop only)
         val took = if (loops.forall(_.path == "driver")) "driver" else "distributed"
         assert(took === loopPath, at)
         val grid = decisions.filter(_.gate == "calibrate.grid").map(_.path)
@@ -56,9 +58,10 @@ class EscalateSpec extends AnyFunSuite {
           assert(grid.forall(p => gridPath.contains(p)), at)
         } else assert(grid.isEmpty, at)
         assert(rows.nonEmpty, s"empty result — $at")
-        rows
+        (rows, seen)
       }
     }.toMap
+  private def results(name: String): Seq[Seq[Row]] = runs(name).map(_._1)
 
   test("each gated row takes the driver, broadcast-grid and shuffle-grid " +
       "branches and returns the same rows on all three") {
@@ -67,6 +70,12 @@ class EscalateSpec extends AnyFunSuite {
       assert(bcast === driver, s"$name: distributed ≠ driver")
       assert(shuffle === driver, s"$name: shuffle grid ≠ driver")
     }
+    // registry-level equality covers distributed edge propagation only if
+    // some connected-components row really propagates over a distributed
+    // edge set under the zero limit: at sf0.001 that row is t53
+    val distributedEdges = exact.filter(name =>
+      runs(name).tail.forall(_._2.contains("cc.edges=distributed")))
+    assert(distributedEdges.contains("t53_triangle_census"), distributedEdges)
     def phases(rows: Seq[Row]): Map[Seq[Any], Double] = rows.map { r =>
       r.toSeq.init -> r.getDouble(r.length - 1)
     }.toMap

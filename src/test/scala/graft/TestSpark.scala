@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites.
+/** One shared local session for all suites. It logs at
+  * [[graft.core.Env.logLevel]] like every main, but keeps its own
+  * `local[4]` and 4 shuffle partitions rather than `Env.sessionConf`,
+  * which would follow `SPARK_GRAFT_CPUS`.
   *
   * Local iteration only (CI/driver default is plain local[4]):
   * `SPARK_GRAFT_MASTER=local-cluster[2,4,4096]` re-runs the ENTIRE suite
@@ -20,6 +23,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.log.level", graft.core.Env.logLevel(sys.env))
     graft.core.Env.extraConf(sys.env).foreach { case (k, v) => b.config(k, v) }
     b.getOrCreate()
   }
@@ -28,9 +32,12 @@ object TestSpark {
 
   private lazy val metrics = graft.core.Env.taskMetrics(spark)
 
+  /** Run `f` under the harness listener, as Bench measures a query. */
+  def span[A](f: => A): graft.core.Env.Span[A] = metrics.span(f)
+
   /** Run `f` and return its value with the `Escalate` decisions it posted. */
   def gates[A](f: => A): (A, Seq[graft.core.Escalate.Decision]) = {
-    val m = metrics.span(f)
+    val m = span(f)
     (m.value, m.gates)
   }
 

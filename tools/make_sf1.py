@@ -76,8 +76,8 @@ for t, keys in SHIFT.items():
             rep = rep.set_column(idx, "ts", ts.cast(pa.timestamp("us")))
         if PERTURB and t == "embeddings" and i > 0:
             # near-but-not-exact duplicates: jitter each component at the
-            # 1e-6 quant level with a deterministic integer pattern (the
-            # same formula as ScaleProbe's perturbed-replica probes)
+            # 1e-6 quant level with a deterministic integer pattern,
+            # ((vec_id % 97) * 131 + pos * 17 + i * 53) % 401 - 200
             idx = rep.schema.get_field_index("embedding")
             emb = rep.column("embedding").combine_chunks()
             vals = emb.values.to_numpy(zero_copy_only=False).astype(np.float64)
