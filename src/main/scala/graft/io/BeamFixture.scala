@@ -24,31 +24,14 @@ object BeamFixture {
 
   def rad(deg: Double): Double = deg * (math.Pi / 180.0)
 
-  def beamValue(x: Int, y: Int, f: Int): Double = {
-    val l = rad(lDeg(x)); val m = rad(lDeg(y))
-    val r = math.sqrt(l * l + m * m)
-    val c = math.cos(math.min(65e0 * (freq(f) * 1e-9) * r, 1.0881))
-    c * c * c
-  }
-
-  /** Imaginary-part model for the complex fixture pair: cos²·sin of the
-    * same clamped Westerbork argument, quartered — deterministic and
-    * restatable in closed form by the DuckDB oracle, and NOT proportional
-    * to the real part, so the trilinear amplitude renormalization of
-    * fast_beam_cubes.py:110-238 is value-changing on this cube. */
-  def beamValueIm(x: Int, y: Int, f: Int): Double = {
-    val l = rad(lDeg(x)); val m = rad(lDeg(y))
-    val r = math.sqrt(l * l + m * m)
-    val a = math.min(65e0 * (freq(f) * 1e-9) * r, 1.0881)
-    val c = math.cos(a)
-    c * c * math.sin(a) * 25e-2
-  }
-
   /** Per-correlation closed-form models for the FULL-Jones quad fixture:
     * all four E-matrix elements are distinct functions of the same
     * clamped Westerbork argument (off-diagonals leakage-small, as real
     * beams have), each restatable in the DuckDB oracle. corr ∈
-    * {xx, xy, yx, yy}. */
+    * {xx, xy, yx, yy}; ("xx", false) is the Westerbork cos³ model. The
+    * imaginary parts are NOT proportional to the real parts, so the
+    * trilinear amplitude renormalization of fast_beam_cubes.py:110-238 is
+    * value-changing on these cubes. */
   def beamValueCorr(corr: String, im: Boolean, x: Int, y: Int, f: Int): Double = {
     val l = rad(lDeg(x)); val m = rad(lDeg(y))
     val r = math.sqrt(l * l + m * m)
@@ -67,46 +50,40 @@ object BeamFixture {
     }
   }
 
-  /** Write the full 4-correlation complex fixture (8 files) through the
-    * filename schema — the E-Jones ELEMENT cubes a MeqTrees beamset
-    * carries (xx/xy/yx/yy × re/im), consumed by the full-Jones beam
-    * term. Same always-regenerate discipline as [[ensure]]. */
-  def ensureQuad(schema: String): Seq[(String, (String, String))] = {
-    val names = Fits.beamFilenames(schema, Seq(9, 10, 11, 12))
-    for ((corr, (reP, imP)) <- names; (path, im) <- Seq((reP, false), (imP, true))) {
-      val a = new Array[Double](NFreq * NPix * NPix)
-      var i = 0
-      for (f <- 0 until NFreq; y <- 0 until NPix; x <- 0 until NPix) {
-        a(i) = beamValueCorr(corr, im, x, y, f); i += 1
-      }
-      writeCube(path, a)
-    }
+  /** Write the complex fixture cubes of the given correlations (casacore
+    * Stokes ids, 9 = XX … 12 = YY) through the beam filename schema
+    * (util/beams.py:212-313): `schema` contains `$(corr)`/`$(reim)`
+    * placeholders, expanded per correlation into a (re, im) file pair —
+    * the ingestion layout the reference's l_axis/m_axis beam loader
+    * consumes, and the E-Jones ELEMENT cubes a MeqTrees beamset carries.
+    * Same always-regenerate discipline as [[ensure]]. */
+  def ensureCorrs(schema: String, corrTypes: Seq[Int])
+      : Seq[(String, (String, String))] = {
+    val names = Fits.beamFilenames(schema, corrTypes)
+    for ((corr, (reP, imP)) <- names; (path, im) <- Seq((reP, false), (imP, true)))
+      writeCube(path, corr, im)
     names
   }
 
-  /** Write the COMPLEX fixture pair through the beam filename schema
-    * (util/beams.py:212-313): `schema` contains `$(corr)`/`$(reim)`
-    * placeholders, expanded for the XX correlation into a (re, im) file
-    * pair — the ingestion layout the reference's l_axis/m_axis beam
-    * loader consumes. Returns (rePath, imPath). Same always-regenerate
-    * discipline as [[ensure]]. */
+  /** The full 4-correlation complex fixture (8 files), consumed by the
+    * full-Jones beam term. */
+  def ensureQuad(schema: String): Seq[(String, (String, String))] =
+    ensureCorrs(schema, Seq(9, 10, 11, 12))
+
+  /** The XX complex fixture pair; returns (rePath, imPath). */
   def ensurePair(schema: String): (String, String) = {
-    val Seq((_, (reP, imP))) =
-      Fits.beamFilenames(schema, Seq(9)) // 9 = casacore Stokes XX
-    def data(im: Boolean): Array[Double] = {
-      val a = new Array[Double](NFreq * NPix * NPix)
-      var i = 0
-      for (f <- 0 until NFreq; y <- 0 until NPix; x <- 0 until NPix) {
-        a(i) = if (im) beamValueIm(x, y, f) else beamValue(x, y, f); i += 1
-      }
-      a
-    }
-    writeCube(reP, data(im = false))
-    writeCube(imP, data(im = true))
-    (reP, imP)
+    val Seq((_, pair)) = ensureCorrs(schema, Seq(9))
+    pair
   }
 
-  private def writeCube(path: String, data: Array[Double]): Unit = {
+  /** The one voxel loop: the (corr, im) model of [[beamValueCorr]] over
+    * the fixture grid, X fastest, written atomically into place. */
+  private def writeCube(path: String, corr: String, im: Boolean): Unit = {
+    val data = new Array[Double](NFreq * NPix * NPix)
+    var i = 0
+    for (f <- 0 until NFreq; y <- 0 until NPix; x <- 0 until NPix) {
+      data(i) = beamValueCorr(corr, im, x, y, f); i += 1
+    }
     val file = new File(path)
     val cards = headerCards
     val tmp = File.createTempFile("graft_beam_build", ".fits",
@@ -147,12 +124,7 @@ object BeamFixture {
     * are deterministic, so concurrent writers converge on identical
     * bytes and the rename is safe either way. */
   def ensure(path: String): String = {
-    val data = new Array[Double](NFreq * NPix * NPix)
-    var i = 0
-    for (f <- 0 until NFreq; y <- 0 until NPix; x <- 0 until NPix) {
-      data(i) = beamValue(x, y, f); i += 1
-    }
-    writeCube(path, data)
+    writeCube(path, "xx", im = false)
     path
   }
 

@@ -41,27 +41,54 @@ object Fits {
     else t
   }
 
+  /** Read header cards up to END (a block without END continues the
+    * header), consuming whole 2880-byte blocks so `in` is left at the
+    * data. A repeated key keeps its last value. */
+  private[io] def readHeader(in: DataInputStream): Map[String, String] = {
+    val cards = mutable.LinkedHashMap.empty[String, String]
+    var ended = false
+    while (!ended) {
+      val block = new Array[Byte](Block)
+      in.readFully(block)
+      var off = 0
+      while (off < Block && !ended) {
+        val card = new String(block, off, 80, "US-ASCII")
+        val key = card.substring(0, 8).trim
+        if (key == "END") ended = true
+        else if (key.nonEmpty && card.length > 10 && card.charAt(8) == '=')
+          cards(key) = cardValue(card.substring(10))
+        off += 80
+      }
+    }
+    cards.toMap
+  }
+
+  /** Write the ordered header cards (key, value already formatted), END,
+    * and blank cards up to the 2880-byte block boundary. */
+  private[io] def writeHeader(out: DataOutputStream,
+                              cards: Seq[(String, String)]): Unit = {
+    val sb = new StringBuilder
+    cards.foreach { case (k, v) =>
+      val c = (k.padTo(8, ' ') + "= " + v).padTo(80, ' ')
+      require(c.length == 80, s"card overflow: $k")
+      sb.append(c)
+    }
+    sb.append("END".padTo(80, ' '))
+    while (sb.length % Block != 0) sb.append(" " * 80)
+    out.writeBytes(sb.result())
+  }
+
+  /** Zero-pad `dataBytes` of written data to the block boundary (Long
+    * arithmetic: an Int byte count overflows past 2^28 doubles). */
+  private[io] def padData(out: DataOutputStream, dataBytes: Long): Unit = {
+    val rem = (dataBytes % Block).toInt
+    if (rem != 0) out.write(new Array[Byte](Block - rem))
+  }
+
   def read(path: String): Hdu = {
     val in = new DataInputStream(new BufferedInputStream(new FileInputStream(path)))
     try {
-      val cards = mutable.LinkedHashMap.empty[String, String]
-      var headerBytes = 0
-      var ended = false
-      while (!ended) {
-        val block = new Array[Byte](Block)
-        in.readFully(block)
-        headerBytes += Block
-        var off = 0
-        while (off < Block && !ended) {
-          val card = new String(block, off, 80, "US-ASCII")
-          val key = card.substring(0, 8).trim
-          if (key == "END") ended = true
-          else if (key.nonEmpty && card.length > 10 && card.charAt(8) == '=')
-            cards(key) = cardValue(card.substring(10))
-          off += 80
-        }
-        // a block without END continues the header; loop reads the next
-      }
+      val cards = readHeader(in)
       val bitpix = cards("BITPIX").trim.toInt
       val nAxes = cards("NAXIS").trim.toInt
       val naxis = (1 to nAxes).map(i => cards(s"NAXIS$i").trim.toInt)
@@ -79,7 +106,7 @@ object Fits {
         case other => throw new IllegalArgumentException(
           s"BITPIX $other not supported (only -32/-64 float data)")
       }
-      Hdu(cards.toMap, naxis, bitpix, data)
+      Hdu(cards, naxis, bitpix, data)
     } finally in.close()
   }
 
@@ -89,21 +116,9 @@ object Fits {
             data: Array[Double]): Unit = {
     val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(path)))
     try {
-      val sb = new StringBuilder
-      def card(k: String, v: String): Unit = {
-        val c = (k.padTo(8, ' ') + "= " + v).padTo(80, ' ')
-        require(c.length == 80, s"card overflow: $k")
-        sb.append(c)
-      }
-      cards.foreach { case (k, v) => card(k, v) }
-      sb.append("END".padTo(80, ' '))
-      while (sb.length % Block != 0) sb.append(" " * 80)
-      out.writeBytes(sb.result())
+      writeHeader(out, cards)
       data.foreach(out.writeDouble)
-      // byte-size arithmetic in Long: data.length * 8 overflows Int past
-      // 2^28 elements and would compute wrong padding
-      val rem = ((data.length.toLong * 8) % Block).toInt
-      if (rem != 0) out.write(new Array[Byte](Block - rem))
+      padData(out, data.length.toLong * 8)
     } finally out.close()
   }
 

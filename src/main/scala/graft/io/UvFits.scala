@@ -1,7 +1,6 @@
 package graft.io
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, FileInputStream, FileOutputStream}
-import scala.collection.mutable
 
 /** Pure-JVM UVFITS (FITS random-groups) I/O — the interchange format
   * radio-astronomy archives ship alongside CASA Measurement Sets (AIPS
@@ -21,8 +20,6 @@ import scala.collection.mutable
   * forms every modern writer emits) are supported.
   */
 object UvFits {
-
-  private val Block = 2880
 
   final case class RandomGroups(cards: Map[String, String],
                                 ptypes: Seq[String],
@@ -49,25 +46,7 @@ object UvFits {
   def readGroups(path: String): RandomGroups = {
     val in = new DataInputStream(new BufferedInputStream(new FileInputStream(path)))
     try {
-      val cards = mutable.LinkedHashMap.empty[String, String]
-      val order = mutable.ArrayBuffer.empty[(String, String)] // repeated keys kept
-      var ended = false
-      while (!ended) {
-        val block = new Array[Byte](Block)
-        in.readFully(block)
-        var off = 0
-        while (off < Block && !ended) {
-          val card = new String(block, off, 80, "US-ASCII")
-          val key = card.substring(0, 8).trim
-          if (key == "END") ended = true
-          else if (key.nonEmpty && card.length > 10 && card.charAt(8) == '=') {
-            val v = cardVal(card.substring(10))
-            cards(key) = v
-            order += key -> v
-          }
-          off += 80
-        }
-      }
+      val cards = Fits.readHeader(in)
       val bitpix = cards("BITPIX").trim.toInt
       val nAxes = cards("NAXIS").trim.toInt
       val naxis = (1 to nAxes).map(i => cards(s"NAXIS$i").trim.toInt)
@@ -110,23 +89,8 @@ object UvFits {
         }
         g += 1
       }
-      RandomGroups(cards.toMap, ptypes, shape, params, data)
+      RandomGroups(cards, ptypes, shape, params, data)
     } finally in.close()
-  }
-
-  private def cardVal(v: String): String = {
-    var inQ = false
-    val sb = new StringBuilder
-    var done = false
-    for (c <- v if !done) {
-      if (c == '\'') { inQ = !inQ; sb += c }
-      else if (c == '/' && !inQ) done = true
-      else sb += c
-    }
-    val t = sb.result().trim
-    if (t.startsWith("'") && t.endsWith("'") && t.length >= 2)
-      t.substring(1, t.length - 1).trim
-    else t
   }
 
   /** Write a BITPIX −64 random-groups HDU (the export face + fixture
@@ -139,16 +103,7 @@ object UvFits {
     require(data.length == params.length * groupSize, "data size mismatch")
     val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(path)))
     try {
-      val sb = new StringBuilder
-      def card(k: String, v: String): Unit = {
-        val c = (k.padTo(8, ' ') + "= " + v).padTo(80, ' ')
-        require(c.length == 80, s"card overflow: $k")
-        sb.append(c)
-      }
-      cards.foreach { case (k, v) => card(k, v) }
-      sb.append("END".padTo(80, ' '))
-      while (sb.length % Block != 0) sb.append(" " * 80)
-      out.writeBytes(sb.result())
+      Fits.writeHeader(out, cards)
       var g = 0
       while (g < params.length) {
         params(g).foreach(out.writeDouble)
@@ -156,9 +111,7 @@ object UvFits {
         while (j < groupSize) { out.writeDouble(data(g * groupSize + j)); j += 1 }
         g += 1
       }
-      val bytes = params.length.toLong * (pcount + groupSize) * 8
-      val rem = (bytes % Block).toInt
-      if (rem != 0) out.write(new Array[Byte](Block - rem))
+      Fits.padData(out, params.length.toLong * (pcount + groupSize) * 8)
     } finally out.close()
   }
 

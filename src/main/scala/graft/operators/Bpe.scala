@@ -27,14 +27,14 @@ import graft.core.Escalate
   *     ever-growing plan and re-compiled fresh codegen (new literals) for
   *     EVERY round — ~125 ms/round at sf0.1 against ~1.5 MB of corpus.
   *     The round's whole model update is alphabet²-bounded, so it needs no
-  *     SQL machinery at all: one `treeAggregate` merges the per-partition
+  *     SQL machinery at all: one `treeReduce` merges the per-partition
   *     long[alphabet²] LUTs (the TextCombiner combiner pattern, §2.3
   *     map-side aggregation taken to its limit) and the 1-row argmax that
   *     used to be a TakeOrdered job becomes an array scan on the driver.
   *
   * Scale shape (unchanged claims, different plumbing): per round each of P
   * partitions ships ONE long[alphabet²] partial (≤512 KB). At ≤64
-  * partitions `treeAggregate` runs depth 1 — no executor-side merge
+  * partitions `treeReduce` runs depth 1 — no executor-side merge
   * layer, the driver reduces up to 64 partials itself (≤32 MB transient,
   * fine); past 64 partitions the depth-⌈log₆₄ P⌉ executor layers take
   * over and the driver receives exactly one array (the 10⁵-partition
@@ -109,13 +109,18 @@ object Bpe {
     val alpha = alphabet // primitive capture: keep task closures tiny
 
     for (r <- 1 to nMerges) {
-      // ONE job per round: the LUT treeAggregate materializes the
+      // ONE job per round: the LUT treeReduce materializes the
       // lazily-checkpointed frame (truncating its lineage), merges the
       // per-partition partials executor-side, and hands the driver a
-      // single alphabet²-long array — the argmax is then free.
-      val counts = cur.treeAggregate(new Array[Long](alpha * alpha))(
-        seqOp = (c, kv) => countPairs(c, kv._2, alpha),
-        combOp = (a, b) => { var i = 0
+      // single alphabet²-long array — the argmax is then free. Each
+      // partition builds its own LUT: a treeAggregate zero value would
+      // serialize the alphabet² array (512 KB at 256 symbols) into every
+      // round's task binary; the closure carries only `alpha`.
+      val counts = cur.mapPartitions { it =>
+        val c = new Array[Long](alpha * alpha)
+        it.foreach(kv => countPairs(c, kv._2, alpha))
+        Iterator.single(c)
+      }.treeReduce((a, b) => { var i = 0
           while (i < a.length) { a(i) += b(i); i += 1 }; a },
         depth = treeDepth(cur.getNumPartitions))
       // cur is materialized now — its predecessor can be released

@@ -74,7 +74,7 @@ object PredictPipeline {
     import org.apache.spark.sql.expressions.Window
     import graft.io.MsDataset
     import graft.functions.ParAngles
-    import graft.rime.{FullBeamCubeTerm, RimeCompiler}
+    import graft.rime.{BeamCubeTerm, RimeCompiler}
     val ms = MsDataset.read(spark, msDir)
     val (ra0, dec0) = MsDataset.phaseCentre(spark, ms)
     // feed basis from CORR_TYPE, as dde_factory does (predict.py:409-428)
@@ -133,7 +133,8 @@ object PredictPipeline {
     // test beam) other plans rely on — a bare registerTerm here poisoned
     // every later default-'E' plan in the session (round-11 x08 lesson)
     RimeCompiler.withTerm('E',
-      FullBeamCubeTerm(beamSchema, lmZoom, regenerate = regenerateBeam)) {
+      BeamCubeTerm(beamSchema, lmZoom, BeamCubeTerm.FullJones,
+        regenerate = regenerateBeam)) {
       RimeCompiler.plan(s"(Ep,Lp,Kpq,Bpq,Lq,Eq): [I] -> [$basis]",
         src, rows, MsDataset.chans(ms), paDf = Some(pa),
         phaseDir = Some((ra0, dec0)))

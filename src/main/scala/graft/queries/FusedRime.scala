@@ -26,6 +26,36 @@ object FusedRime {
       .withColumn("i", col("flux"))
       .withColumn("q", (col("src_id") % 3 - 1) / 4e0)
 
+  /** x12/x14's oracle: the [I, Q] sources through the beam `elements`
+    * (cube, coordinate chain, corner joins, blends — [[BeamSql.ctes]]),
+    * sandwiched E·M·Eᴴ in the compiler's application order and fsum-ed
+    * over the sources. */
+  private def beamOracle(elements: Seq[BeamSql.Element], eM: MS): String = {
+    val beam = BeamSql.ctes(elements, Seq("chan", "freq"),
+      Seq(Seq("src_id", "flux", "l", "m", "chan", "freq")))
+    val k = CS(s"cos($phaseSql)", s"sin($phaseSql)")
+    def scaleS(b: String) = CS(s"(${k.re} * ($b))", s"(${k.im} * ($b))")
+    val m0 = MS(
+      scaleS(s"flux + $qSql"),
+      CS("0e0", "0e0") * k,
+      CS("0e0", "(-0e0)") * k,
+      scaleS(s"flux - $qSql"))
+    val v = mulS(mulS(eM, m0), hermS(eM))
+    val sums = Seq("xx" -> v.m00, "xy" -> v.m01, "yx" -> v.m10, "yy" -> v.m11)
+      .map { case (n, z) =>
+        s"  ${fsumSql(z.re)} AS ${n}_re,\n  ${fsumSql(z.im)} AS ${n}_im"
+      }.mkString(",\n")
+    s"""WITH src AS (${sourcesSql(5)}), rws AS (${uvwRowsSql(16)}),
+       |ch AS (SELECT CAST(n_nationkey AS BIGINT) AS chan,
+       |       7e8 + n_nationkey * 15e7 AS freq
+       |       FROM nation WHERE n_nationkey < 9),
+       |$beam
+       |SELECT row_id, time_index, ant1, ant2, chan,
+       |$sums
+       |FROM rws, pe
+       |GROUP BY row_id, time_index, ant1, ant2, chan""".stripMargin
+  }
+
   val qs: Seq[Q] = Seq(
 
     // -- X1-X5: "(Kpq,Bpq): [I,Q] -> [XX,YY]" — parse, plan, execute.
@@ -421,115 +451,13 @@ object FusedRime {
     //    oracle restates the cube from the fixture's closed-form
     //    generating model (r4 shared rationals, the r16-proven bucket),
     //    the full coordinate chain, the corner joins, and E·M·Eᴴ.
-    Q("x12_fused_rime_beam", {
-      import graft.io.BeamFixture.{NPix, NFreq}
-      // closed-form cube (BeamFixture.beamValue/beamValueIm restated)
-      val arg = "LEAST(65e0 * (freq * 1e-9) * sqrt(l*l + m*m), 10881e-4)"
-      val cubeSql =
-        s"""SELECT x AS li, y AS mi, f AS fi,
-           |    ${graft.core.Det.r4Sql("cos(a) * cos(a) * cos(a)")} AS b_re,
-           |    ${graft.core.Det.r4Sql("cos(a) * cos(a) * sin(a) * 25e-2")} AS b_im
-           |  FROM (
-           |    SELECT x, y, f, $arg AS a
-           |    FROM (
-           |      SELECT CAST(px.n_nationkey AS BIGINT) AS x,
-           |        CAST(py.n_nationkey AS BIGINT) AS y,
-           |        CAST(pf.n_nationkey AS BIGINT) AS f,
-           |        ((CAST(px.n_nationkey AS DOUBLE) - 4e0) * 375e-3) * (pi() / 180e0) AS l,
-           |        ((CAST(py.n_nationkey AS DOUBLE) - 4e0) * 375e-3) * (pi() / 180e0) AS m,
-           |        856e6 + pf.n_nationkey * 214e6 + (CASE WHEN pf.n_nationkey = 0
-           |          OR pf.n_nationkey = ${NFreq - 1} THEN 0e0
-           |          ELSE ((pf.n_nationkey*3) % 5 - 2) * 1e5 END) AS freq
-           |      FROM nation px, nation py, nation pf
-           |      WHERE px.n_nationkey < $NPix AND py.n_nationkey < $NPix
-           |        AND pf.n_nationkey < $NFreq))""".stripMargin
-      // GFREQ grid values (exact integers; jitter per BeamFixture.freq)
-      val gf = (0 until NFreq).map(f => 856e6 + f * 214e6 +
-        (if (f == 0 || f == NFreq - 1) 0.0 else ((f * 3) % 5 - 2) * 1e5))
-      def gfLit(v: Double): String = s"${v.toLong}e0"
-      def planeCase(off: Int): String =
-        "(CASE f0 " + (0 until NFreq - 1).map(k =>
-          s"WHEN $k THEN ${gfLit(gf(k + off))} ").mkString + "ELSE 0e0 END)"
-      val fmin = gfLit(gf.head); val fmax = gfLit(gf.last)
-      val f0Sql = (1 until NFreq - 1).map(k =>
-        s"(CASE WHEN fc >= ${gfLit(gf(k))} THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      // spatial map (mirrors BeamCubeTerm.pixCols: crpix-1 = 4, zoom 2048)
-      def pixSql(lm: String, p: String): String =
-        s"""GREATEST(0e0, LEAST(4e0 + ($lm * 2048e0 * fscale)
-           |      / (375e-3 * (pi() / 180e0)), ${NPix - 1}e0)) AS ${p}cc""".stripMargin
-      val corners = graft.rime.BeamCubeTerm.corners
-      def wS(a: Int, b: Int, c: Int): String = Seq(
-        if (a == 0) "(1e0-dl)" else "dl",
-        if (b == 0) "(1e0-dm)" else "dm",
-        if (c == 0) "(1e0-fw)" else "fw").mkString("*")
-      def blendS(f: String => String): String =
-        corners.map { case (nm, a, b, c) => s"${wS(a, b, c)}*${f(nm)}" }
-          .mkString(" + ")
-      val wre = blendS(nm => s"$nm.b_re")
-      val wim = blendS(nm => s"$nm.b_im")
-      val wabs = blendS(nm => s"sqrt($nm.b_re*$nm.b_re + $nm.b_im*$nm.b_im)")
-      val den = s"sqrt(($wre)*($wre) + ($wim)*($wim))"
-      val joins = corners.map { case (nm, a, b, c) =>
-        s"JOIN cube $nm ON $nm.li = pp.l0+$a AND $nm.mi = pp.m0+$b AND $nm.fi = pp.f0+$c"
-      }.mkString("\n")
-      // E·M·Eᴴ in the compiler's application order
-      val k = CS(s"cos($phaseSql)", s"sin($phaseSql)")
-      def scaleS(b: String) = CS(s"(${k.re} * ($b))", s"(${k.im} * ($b))")
-      val m0 = MS(
-        scaleS(s"flux + $qSql"),
-        CS("0e0", "0e0") * k,
-        CS("0e0", "(-0e0)") * k,
-        scaleS(s"flux - $qSql"))
-      val eM = MS(CS("e_re", "e_im"), CS("0e0", "0e0"),
-        CS("0e0", "0e0"), CS("e_re", "e_im"))
-      val v = mulS(mulS(eM, m0), hermS(eM))
-      val sums = Seq("xx" -> v.m00, "xy" -> v.m01, "yx" -> v.m10, "yy" -> v.m11)
-        .map { case (n, z) =>
-          s"  ${fsumSql(z.re)} AS ${n}_re,\n  ${fsumSql(z.im)} AS ${n}_im"
-        }.mkString(",\n")
-      s"""WITH src AS (${sourcesSql(5)}), rws AS (${uvwRowsSql(16)}),
-         |ch AS (SELECT CAST(n_nationkey AS BIGINT) AS chan,
-         |       7e8 + n_nationkey * 15e7 AS freq
-         |       FROM nation WHERE n_nationkey < 9),
-         |cube AS ($cubeSql),
-         |fm0 AS (
-         |  SELECT chan, freq,
-         |    CASE WHEN freq < $fmin THEN freq/$fmin
-         |         WHEN freq > $fmax THEN freq/$fmax ELSE 1e0 END AS fscale,
-         |    CASE WHEN freq < $fmin THEN $fmin
-         |         WHEN freq > $fmax THEN $fmax ELSE freq END AS fc
-         |  FROM ch),
-         |fm1 AS (SELECT *, $f0Sql AS f0 FROM fm0),
-         |fm AS (
-         |  SELECT chan, freq, fscale, CAST(f0 AS BIGINT) AS f0,
-         |    (fc - ${planeCase(0)}) / (${planeCase(1)} - ${planeCase(0)}) AS fw
-         |  FROM fm1),
-         |pt AS (
-         |  SELECT src_id, flux, l, m, chan, freq, f0, fw,
-         |    ${pixSql("l", "l")},
-         |    ${pixSql("m", "m")}
-         |  FROM src, fm),
-         |pp AS (
-         |  SELECT src_id, flux, l, m, chan, freq, f0, fw,
-         |    LEAST(CAST(FLOOR(lcc) AS BIGINT), ${NPix - 2}) AS l0,
-         |    LEAST(CAST(FLOOR(mcc) AS BIGINT), ${NPix - 2}) AS m0,
-         |    lcc - CAST(LEAST(CAST(FLOOR(lcc) AS BIGINT), ${NPix - 2}) AS DOUBLE) AS dl,
-         |    mcc - CAST(LEAST(CAST(FLOOR(mcc) AS BIGINT), ${NPix - 2}) AS DOUBLE) AS dm
-         |  FROM pt),
-         |pe AS (
-         |  SELECT pp.src_id, pp.flux, pp.l, pp.m, pp.chan, pp.freq,
-         |    CASE WHEN $den = 0e0 THEN $wre
-         |         ELSE ($wre) * (($wabs) / ($den)) END AS e_re,
-         |    CASE WHEN $den = 0e0 THEN $wim
-         |         ELSE ($wim) * (($wabs) / ($den)) END AS e_im
-         |  FROM pp
-         |$joins)
-         |SELECT row_id, time_index, ant1, ant2, chan,
-         |$sums
-         |FROM rws, pe
-         |GROUP BY row_id, time_index, ant1, ant2, chan""".stripMargin
-    }) { (s, dir) =>
+    Q("x12_fused_rime_beam",
+      // x12 spells its XX closed forms with spaces
+      beamOracle(Seq(BeamSql.Element("", "cos(a) * cos(a) * cos(a)",
+          "cos(a) * cos(a) * sin(a) * 25e-2")),
+        MS(CS("e_re", "e_im"), CS("0e0", "0e0"),
+          CS("0e0", "0e0"), CS("e_re", "e_im")))
+    ) { (s, dir) =>
       import graft.io.BeamFixture
       import graft.rime.BeamCubeTerm
       RimeCompiler.registerTerm('C',
@@ -549,131 +477,15 @@ object FusedRime {
     //    off-diagonals included — sandwiches the brightness as E·B·Eᴴ.
     //    Same determinism class as x12: r4 shared-rational voxels, every
     //    downstream op IEEE-exact class (a).
-    Q("x14_fused_rime_beam_full", {
-      import graft.io.BeamFixture.{NPix, NFreq}
-      // closed-form quad cube (BeamFixture.beamValueCorr restated):
-      // distinct functions of the same clamped Westerbork argument
-      val arg = "LEAST(65e0 * (freq * 1e-9) * sqrt(l*l + m*m), 10881e-4)"
-      val corrForms: Seq[(String, String, String)] = Seq(
-        ("xx", "cos(a)*cos(a)*cos(a)", "cos(a)*cos(a)*sin(a) * 25e-2"),
-        ("xy", "cos(a)*cos(a)*sin(a) * 125e-3", "cos(a)*sin(a)*sin(a) * 625e-4"),
-        ("yx", "cos(a)*sin(a)*sin(a) * 625e-4", "(-(cos(a)*cos(a)*sin(a))) * 125e-3"),
-        ("yy", "cos(a)*cos(a)*cos(a) * 75e-2 + cos(a) * 25e-2",
-          "cos(a)*cos(a)*sin(a) * 125e-3"))
-      val valCols = corrForms.map { case (c, re, im) =>
-        s"    ${graft.core.Det.r4Sql(re)} AS b_${c}_re,\n" +
-          s"    ${graft.core.Det.r4Sql(im)} AS b_${c}_im"
-      }.mkString(",\n")
-      val cubeSql =
-        s"""SELECT x AS li, y AS mi, f AS fi,
-           |$valCols
-           |  FROM (
-           |    SELECT x, y, f, $arg AS a
-           |    FROM (
-           |      SELECT CAST(px.n_nationkey AS BIGINT) AS x,
-           |        CAST(py.n_nationkey AS BIGINT) AS y,
-           |        CAST(pf.n_nationkey AS BIGINT) AS f,
-           |        ((CAST(px.n_nationkey AS DOUBLE) - 4e0) * 375e-3) * (pi() / 180e0) AS l,
-           |        ((CAST(py.n_nationkey AS DOUBLE) - 4e0) * 375e-3) * (pi() / 180e0) AS m,
-           |        856e6 + pf.n_nationkey * 214e6 + (CASE WHEN pf.n_nationkey = 0
-           |          OR pf.n_nationkey = ${NFreq - 1} THEN 0e0
-           |          ELSE ((pf.n_nationkey*3) % 5 - 2) * 1e5 END) AS freq
-           |      FROM nation px, nation py, nation pf
-           |      WHERE px.n_nationkey < $NPix AND py.n_nationkey < $NPix
-           |        AND pf.n_nationkey < $NFreq))""".stripMargin
-      val gf = (0 until NFreq).map(f => 856e6 + f * 214e6 +
-        (if (f == 0 || f == NFreq - 1) 0.0 else ((f * 3) % 5 - 2) * 1e5))
-      def gfLit(v: Double): String = s"${v.toLong}e0"
-      def planeCase(off: Int): String =
-        "(CASE f0 " + (0 until NFreq - 1).map(k =>
-          s"WHEN $k THEN ${gfLit(gf(k + off))} ").mkString + "ELSE 0e0 END)"
-      val fmin = gfLit(gf.head); val fmax = gfLit(gf.last)
-      val f0Sql = (1 until NFreq - 1).map(k =>
-        s"(CASE WHEN fc >= ${gfLit(gf(k))} THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      def pixSql(lm: String, p: String): String =
-        s"""GREATEST(0e0, LEAST(4e0 + ($lm * 2048e0 * fscale)
-           |      / (375e-3 * (pi() / 180e0)), ${NPix - 1}e0)) AS ${p}cc""".stripMargin
-      val corners = graft.rime.BeamCubeTerm.corners
-      def wS(a: Int, b: Int, c: Int): String = Seq(
-        if (a == 0) "(1e0-dl)" else "dl",
-        if (b == 0) "(1e0-dm)" else "dm",
-        if (c == 0) "(1e0-fw)" else "fw").mkString("*")
-      def blendS(f: String => String): String =
-        corners.map { case (nm, a, b, c) => s"${wS(a, b, c)}*${f(nm)}" }
-          .mkString(" + ")
-      // one renormalized complex blend per correlation element
-      val eCols = corrForms.map(_._1).map { c =>
-        val wre = blendS(nm => s"$nm.b_${c}_re")
-        val wim = blendS(nm => s"$nm.b_${c}_im")
-        val wabs = blendS(nm =>
-          s"sqrt($nm.b_${c}_re*$nm.b_${c}_re + $nm.b_${c}_im*$nm.b_${c}_im)")
-        val den = s"sqrt(($wre)*($wre) + ($wim)*($wim))"
-        s"""    CASE WHEN $den = 0e0 THEN $wre
-           |         ELSE ($wre) * (($wabs) / ($den)) END AS e_${c}_re,
-           |    CASE WHEN $den = 0e0 THEN $wim
-           |         ELSE ($wim) * (($wabs) / ($den)) END AS e_${c}_im""".stripMargin
-      }.mkString(",\n")
-      val joins = corners.map { case (nm, a, b, c) =>
-        s"JOIN cube $nm ON $nm.li = pp.l0+$a AND $nm.mi = pp.m0+$b AND $nm.fi = pp.f0+$c"
-      }.mkString("\n")
-      val k = CS(s"cos($phaseSql)", s"sin($phaseSql)")
-      def scaleS(b: String) = CS(s"(${k.re} * ($b))", s"(${k.im} * ($b))")
-      val m0 = MS(
-        scaleS(s"flux + $qSql"),
-        CS("0e0", "0e0") * k,
-        CS("0e0", "(-0e0)") * k,
-        scaleS(s"flux - $qSql"))
-      val eM = MS(CS("e_xx_re", "e_xx_im"), CS("e_xy_re", "e_xy_im"),
-        CS("e_yx_re", "e_yx_im"), CS("e_yy_re", "e_yy_im"))
-      val v = mulS(mulS(eM, m0), hermS(eM))
-      val sums = Seq("xx" -> v.m00, "xy" -> v.m01, "yx" -> v.m10, "yy" -> v.m11)
-        .map { case (n, z) =>
-          s"  ${fsumSql(z.re)} AS ${n}_re,\n  ${fsumSql(z.im)} AS ${n}_im"
-        }.mkString(",\n")
-      s"""WITH src AS (${sourcesSql(5)}), rws AS (${uvwRowsSql(16)}),
-         |ch AS (SELECT CAST(n_nationkey AS BIGINT) AS chan,
-         |       7e8 + n_nationkey * 15e7 AS freq
-         |       FROM nation WHERE n_nationkey < 9),
-         |cube AS ($cubeSql),
-         |fm0 AS (
-         |  SELECT chan, freq,
-         |    CASE WHEN freq < $fmin THEN freq/$fmin
-         |         WHEN freq > $fmax THEN freq/$fmax ELSE 1e0 END AS fscale,
-         |    CASE WHEN freq < $fmin THEN $fmin
-         |         WHEN freq > $fmax THEN $fmax ELSE freq END AS fc
-         |  FROM ch),
-         |fm1 AS (SELECT *, $f0Sql AS f0 FROM fm0),
-         |fm AS (
-         |  SELECT chan, freq, fscale, CAST(f0 AS BIGINT) AS f0,
-         |    (fc - ${planeCase(0)}) / (${planeCase(1)} - ${planeCase(0)}) AS fw
-         |  FROM fm1),
-         |pt AS (
-         |  SELECT src_id, flux, l, m, chan, freq, f0, fw,
-         |    ${pixSql("l", "l")},
-         |    ${pixSql("m", "m")}
-         |  FROM src, fm),
-         |pp AS (
-         |  SELECT src_id, flux, l, m, chan, freq, f0, fw,
-         |    LEAST(CAST(FLOOR(lcc) AS BIGINT), ${NPix - 2}) AS l0,
-         |    LEAST(CAST(FLOOR(mcc) AS BIGINT), ${NPix - 2}) AS m0,
-         |    lcc - CAST(LEAST(CAST(FLOOR(lcc) AS BIGINT), ${NPix - 2}) AS DOUBLE) AS dl,
-         |    mcc - CAST(LEAST(CAST(FLOOR(mcc) AS BIGINT), ${NPix - 2}) AS DOUBLE) AS dm
-         |  FROM pt),
-         |pe AS (
-         |  SELECT pp.src_id, pp.flux, pp.l, pp.m, pp.chan, pp.freq,
-         |$eCols
-         |  FROM pp
-         |$joins)
-         |SELECT row_id, time_index, ant1, ant2, chan,
-         |$sums
-         |FROM rws, pe
-         |GROUP BY row_id, time_index, ant1, ant2, chan""".stripMargin
-    }) { (s, dir) =>
+    Q("x14_fused_rime_beam_full",
+      beamOracle(BeamSql.quad,
+        MS(CS("e_xx_re", "e_xx_im"), CS("e_xy_re", "e_xy_im"),
+          CS("e_yx_re", "e_yx_im"), CS("e_yy_re", "e_yy_im")))
+    ) { (s, dir) =>
       import graft.io.BeamFixture
-      import graft.rime.FullBeamCubeTerm
-      RimeCompiler.registerTerm('J',
-        FullBeamCubeTerm(BeamFixture.defaultQuadSchema, 2048.0))
+      import graft.rime.BeamCubeTerm
+      RimeCompiler.registerTerm('J', BeamCubeTerm(
+        BeamFixture.defaultQuadSchema, 2048.0, BeamCubeTerm.FullJones))
       val ch = graft.core.Tables.nation(s, dir)
         .filter(col("n_nationkey") < 9)
         .select(col("n_nationkey").cast("long").as("chan"),

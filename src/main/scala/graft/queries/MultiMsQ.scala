@@ -274,80 +274,19 @@ object MultiMsQ {
     //    SCALES (l, m) by f/f_max (the reference's extrapolation,
     //    fast_beam_cubes.py:10-54) — so the staged blend dimension is
     //    keyed (src_id, chan, ddid), not (src_id, chan) (the
-    //    FullBeamCubeTerm group-aware key). Staging stays the x14
-    //    dimension-frame shape: gathers evaluate once per (src, ddid,
-    //    chan), localCheckpoint-pinned, broadcast-joined back — the
-    //    PlanSpec staged-dimension-blend guard. Determinism: x14's class —
+    //    BeamCubeTerm group-aware key). Staging stays the x14
+    //    dimension-frame shape: blends computed once per (src, ddid,
+    //    chan) on the driver, broadcast-joined back as a local table —
+    //    the PlanSpec staged-dimension-blend guard. Determinism: x14's class —
     //    r4 shared-rational voxels, IEEE-exact blend chain, fsum sums.
     //    Reference: rime/examples/predict.py:475-527 (vis_factory per
     //    group with --beam).
     Q("x17_fused_rime_grouped_beam", {
-      import graft.io.BeamFixture.{NPix, NFreq}
       import SqlCx.{CS, MS, mulS, hermS}
       import graft.core.Det.fsumSql
-      val arg = "LEAST(65e0 * (freq * 1e-9) * sqrt(l*l + m*m), 10881e-4)"
-      val corrForms: Seq[(String, String, String)] = Seq(
-        ("xx", "cos(a)*cos(a)*cos(a)", "cos(a)*cos(a)*sin(a) * 25e-2"),
-        ("xy", "cos(a)*cos(a)*sin(a) * 125e-3", "cos(a)*sin(a)*sin(a) * 625e-4"),
-        ("yx", "cos(a)*sin(a)*sin(a) * 625e-4", "(-(cos(a)*cos(a)*sin(a))) * 125e-3"),
-        ("yy", "cos(a)*cos(a)*cos(a) * 75e-2 + cos(a) * 25e-2",
-          "cos(a)*cos(a)*sin(a) * 125e-3"))
-      val valCols = corrForms.map { case (c, re, im) =>
-        s"    ${Det.r4Sql(re)} AS b_${c}_re,\n" +
-          s"    ${Det.r4Sql(im)} AS b_${c}_im"
-      }.mkString(",\n")
-      val cubeSql =
-        s"""SELECT x AS li, y AS mi, f AS fi,
-           |$valCols
-           |  FROM (
-           |    SELECT x, y, f, $arg AS a
-           |    FROM (
-           |      SELECT CAST(px.n_nationkey AS BIGINT) AS x,
-           |        CAST(py.n_nationkey AS BIGINT) AS y,
-           |        CAST(pf.n_nationkey AS BIGINT) AS f,
-           |        ((CAST(px.n_nationkey AS DOUBLE) - 4e0) * 375e-3) * (pi() / 180e0) AS l,
-           |        ((CAST(py.n_nationkey AS DOUBLE) - 4e0) * 375e-3) * (pi() / 180e0) AS m,
-           |        856e6 + pf.n_nationkey * 214e6 + (CASE WHEN pf.n_nationkey = 0
-           |          OR pf.n_nationkey = ${NFreq - 1} THEN 0e0
-           |          ELSE ((pf.n_nationkey*3) % 5 - 2) * 1e5 END) AS freq
-           |      FROM nation px, nation py, nation pf
-           |      WHERE px.n_nationkey < $NPix AND py.n_nationkey < $NPix
-           |        AND pf.n_nationkey < $NFreq))""".stripMargin
-      val gf = (0 until NFreq).map(f => 856e6 + f * 214e6 +
-        (if (f == 0 || f == NFreq - 1) 0.0 else ((f * 3) % 5 - 2) * 1e5))
-      def gfLit(v: Double): String = s"${v.toLong}e0"
-      def planeCase(off: Int): String =
-        "(CASE f0 " + (0 until NFreq - 1).map(k =>
-          s"WHEN $k THEN ${gfLit(gf(k + off))} ").mkString + "ELSE 0e0 END)"
-      val fmin = gfLit(gf.head); val fmax = gfLit(gf.last)
-      val f0Sql = (1 until NFreq - 1).map(k =>
-        s"(CASE WHEN fc >= ${gfLit(gf(k))} THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      def pixSql(lm: String, p: String): String =
-        s"""GREATEST(0e0, LEAST(4e0 + ($lm * 2048e0 * fscale)
-           |      / (375e-3 * (pi() / 180e0)), ${NPix - 1}e0)) AS ${p}cc""".stripMargin
-      val corners = graft.rime.BeamCubeTerm.corners
-      def wS(a: Int, b: Int, c: Int): String = Seq(
-        if (a == 0) "(1e0-dl)" else "dl",
-        if (b == 0) "(1e0-dm)" else "dm",
-        if (c == 0) "(1e0-fw)" else "fw").mkString("*")
-      def blendS(f: String => String): String =
-        corners.map { case (nm, a, b, c) => s"${wS(a, b, c)}*${f(nm)}" }
-          .mkString(" + ")
-      val eCols = corrForms.map(_._1).map { c =>
-        val wre = blendS(nm => s"$nm.b_${c}_re")
-        val wim = blendS(nm => s"$nm.b_${c}_im")
-        val wabs = blendS(nm =>
-          s"sqrt($nm.b_${c}_re*$nm.b_${c}_re + $nm.b_${c}_im*$nm.b_${c}_im)")
-        val den = s"sqrt(($wre)*($wre) + ($wim)*($wim))"
-        s"""    CASE WHEN $den = 0e0 THEN $wre
-           |         ELSE ($wre) * (($wabs) / ($den)) END AS e_${c}_re,
-           |    CASE WHEN $den = 0e0 THEN $wim
-           |         ELSE ($wim) * (($wabs) / ($den)) END AS e_${c}_im""".stripMargin
-      }.mkString(",\n")
-      val joins = corners.map { case (nm, a, b, c) =>
-        s"JOIN cube $nm ON $nm.li = pp.l0+$a AND $nm.mi = pp.m0+$b AND $nm.fi = pp.f0+$c"
-      }.mkString("\n")
+      val beam = BeamSql.ctes(BeamSql.quad, Seq("ddid", "chan", "freq"),
+        Seq(Seq("src_id", "field_id", "i", "q", "l", "m"),
+          Seq("ddid", "chan", "freq")))
       val k = CS(s"cos(${SyntheticMs.phaseSql})", s"sin(${SyntheticMs.phaseSql})")
       def scaleS(b: String) = CS(s"(${k.re} * ($b))", s"(${k.im} * ($b))")
       val m0 = MS(
@@ -387,37 +326,7 @@ object MultiMsQ {
          |    (2, 1, (1e-2)/1024e0, (-5e-3)/1024e0, 125e-2, 125e-3),
          |    (3, 1, (3e-2)/1024e0, (-1e-2)/1024e0, 75e-2, -125e-3))
          |    AS t(src_id, field_id, l, m, i, q)),
-         |cube AS ($cubeSql),
-         |fm0 AS (
-         |  SELECT ddid, chan, freq,
-         |    CASE WHEN freq < $fmin THEN freq/$fmin
-         |         WHEN freq > $fmax THEN freq/$fmax ELSE 1e0 END AS fscale,
-         |    CASE WHEN freq < $fmin THEN $fmin
-         |         WHEN freq > $fmax THEN $fmax ELSE freq END AS fc
-         |  FROM ch),
-         |fm1 AS (SELECT *, $f0Sql AS f0 FROM fm0),
-         |fm AS (
-         |  SELECT ddid, chan, freq, fscale, CAST(f0 AS BIGINT) AS f0,
-         |    (fc - ${planeCase(0)}) / (${planeCase(1)} - ${planeCase(0)}) AS fw
-         |  FROM fm1),
-         |pt AS (
-         |  SELECT src_id, field_id, i, q, l, m, ddid, chan, freq, f0, fw,
-         |    ${pixSql("l", "l")},
-         |    ${pixSql("m", "m")}
-         |  FROM src, fm),
-         |pp AS (
-         |  SELECT src_id, field_id, i, q, l, m, ddid, chan, freq, f0, fw,
-         |    LEAST(CAST(FLOOR(lcc) AS BIGINT), ${NPix - 2}) AS l0,
-         |    LEAST(CAST(FLOOR(mcc) AS BIGINT), ${NPix - 2}) AS m0,
-         |    lcc - CAST(LEAST(CAST(FLOOR(lcc) AS BIGINT), ${NPix - 2}) AS DOUBLE) AS dl,
-         |    mcc - CAST(LEAST(CAST(FLOOR(mcc) AS BIGINT), ${NPix - 2}) AS DOUBLE) AS dm
-         |  FROM pt),
-         |pe AS (
-         |  SELECT pp.src_id, pp.field_id, pp.i, pp.q, pp.l, pp.m,
-         |    pp.ddid, pp.chan, pp.freq,
-         |$eCols
-         |  FROM pp
-         |$joins)
+         |$beam
          |SELECT mn.field_id, mn.ddid, row_id, time_index, ant1, ant2, chan,
          |$sums
          |FROM mn JOIN pe ON pe.field_id = mn.field_id AND pe.ddid = mn.ddid
@@ -425,9 +334,9 @@ object MultiMsQ {
     }) { (s, dir) =>
       import s.implicits._
       import graft.io.BeamFixture
-      import graft.rime.{FullBeamCubeTerm, RimeCompiler}
-      RimeCompiler.registerTerm('J',
-        FullBeamCubeTerm(BeamFixture.defaultQuadSchema, 2048.0))
+      import graft.rime.{BeamCubeTerm, RimeCompiler}
+      RimeCompiler.registerTerm('J', BeamCubeTerm(
+        BeamFixture.defaultQuadSchema, 2048.0, BeamCubeTerm.FullJones))
       val msDir = MsDataset.ensureMultiFixture(s)
       val ms = MsDataset.read(s, msDir)
       val chans = ms.dataDescription.get

@@ -4144,7 +4144,7 @@ object TrainingData {
     //    corpus with the learned table — the final rewritten text IS the
     //    encoding (every char = one token). The G6 iterative idiom as an
     //    RDD driver loop (graft.operators.Bpe, round 13): per round ONE
-    //    treeAggregate merges alphabet²-bounded LUT partials (≤16 384
+    //    treeReduce merges alphabet²-bounded LUT partials (≤16 384
     //    codes per partition at ANY corpus size) and the argmax is a
     //    driver array scan; the rewrite is a corpus-linear mapValues with
     //    the lineage cut by localCheckpoint. chr(1..16) stay inside the
@@ -4202,7 +4202,7 @@ object TrainingData {
     //    string order equals codepoint order (so the (count DESC, pair
     //    ASC) tie-break equals pair-code order), and md5 hashes the same
     //    UTF-8 bytes. Loop shape unchanged from t51 (graft.operators.Bpe):
-    //    per round ONE bounded LUT treeAggregate, a driver argmax, one
+    //    per round ONE bounded LUT treeReduce, a driver argmax, one
     //    corpus-linear rewrite, lineage cut per round. Oracle: 64 rounds
     //    unrolled as MATERIALIZED CTEs (the t51 anti-inlining
     //    discipline).

@@ -2,6 +2,7 @@ package graft.rime
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.core.{Cx, CxCol, Det}
 import graft.functions.Feeds.Jones2x2
 import graft.io.{BeamFixture, Fits}
@@ -13,10 +14,11 @@ import graft.io.{BeamFixture, Fits}
   * fast_beam_cubes.py:10-54 freq_grid_interp, 110-238 trilinear gather +
   * amplitude renormalization):
   *
-  *   - the complex cube is ingested from a REAL FITS file pair through the
-  *     `$(corr)`/`$(reim)` filename schema (util/beams.py:212-313) by the
-  *     pure-JVM [[graft.io.Fits]] reader; geometry (CRPIX/CDELT/CUNIT) and
-  *     the irregular GFREQ1..N frequency grid come from the parsed header;
+  *   - each E-matrix element's complex cube is ingested from a REAL FITS
+  *     file pair through the `$(corr)`/`$(reim)` filename schema
+  *     (util/beams.py:212-313) by the pure-JVM [[graft.io.Fits]] reader;
+  *     geometry (CRPIX/CDELT/CUNIT) and the irregular GFREQ1..N frequency
+  *     grid come from the parsed header;
   *   - data frequencies interpolate BETWEEN beam freq planes; frequencies
   *     outside the grid clamp to the boundary plane and SCALE the (l, m)
   *     coordinates by f/f_boundary (the reference's extrapolation);
@@ -25,14 +27,18 @@ import graft.io.{BeamFixture, Fits}
   *   - the complex blend is rescaled so its modulus equals the blended
   *     modulus of the corners (amplitude renormalization).
   *
+  * `elements` is the element set (casacore Stokes ids): the XX cube alone
+  * ([[BeamCubeTerm.Diagonal]]) samples the diagonal Jones diag(e, e); the
+  * XX/XY/YX/YY quad ([[BeamCubeTerm.FullJones]], a MeqTrees beamset) the
+  * full 2×2 Jones the compiler sandwiches as E·B·Eᴴ, off-diagonal leakage
+  * included. Every element is sampled independently with its own
+  * amplitude renormalization, like the reference's per-correlation loop.
+  *
   * Term-protocol mapping (terms/core.py:28-197): `stage` is the setup pass
-  * — it derives the per-(source, chan) sampling coordinates and performs
-  * the corner gather as BROADCAST joins against the voxel dimension table
-  * (the cube is executor-memory sized at any data scale, like the
-  * reference's in-memory beam array); `jones` is the sampler — a diagonal
-  * complex Jones from the staged blend columns. The cube is identical for
-  * both antennas of a baseline (one physical beam), so the staged columns
-  * are side-independent and staging is idempotent.
+  * and `jones` the sampler over the staged `bce_<corr>_re/_im` columns.
+  * The cube is identical for both antennas of a baseline (one physical
+  * beam), so the staged columns are side-independent and staging is
+  * idempotent.
   *
   * Determinism (per CLAUDE.md): voxel values are r4-rounded shared
   * rationals (the r16-proven bucket for the fixture's compound-libm
@@ -41,174 +47,89 @@ import graft.io.{BeamFixture, Fits}
   * sampled Jones needs no output rounding before the fsum source sum.
   *
   * `lmZoom` maps the source direction-cosines onto the beam extent (the
-  * reference's beam_lm_extents scaling).
+  * reference's beam_lm_extents scaling). `regenerate = true` is the
+  * oracle-fixture discipline (never trust a stale /tmp cube: the
+  * BeamFixture cubes are rewritten through the schema); `false` consumes
+  * EXISTING cubes — e.g. a BeamFactory-written MeqTrees set — exactly as
+  * the reference's loader reads whatever the schema names.
   */
 final case class BeamCubeTerm(schema: String, lmZoom: Double,
+                              elements: Seq[Int] = BeamCubeTerm.Diagonal,
                               regenerate: Boolean = true)
     extends RimeCompiler.DdeTerm {
+  require(elements == BeamCubeTerm.Diagonal ||
+    elements == BeamCubeTerm.FullJones,
+    s"beam element set must be XX or XX/XY/YX/YY, got $elements")
 
-  override def stage(df: DataFrame, side: String): DataFrame = {
-    if (df.columns.contains("bce_re")) return df // one beam, both sides
-    // regenerate=true is the oracle-fixture discipline (never trust a
-    // stale /tmp cube); regenerate=false consumes EXISTING cubes — e.g.
-    // a BeamFactory-written MeqTrees pair — exactly as the reference's
-    // loader reads whatever the schema names
-    val (reP, imP) =
-      if (regenerate) BeamFixture.ensurePair(schema)
-      else {
-        val Seq((_, pair)) = Fits.beamFilenames(schema, Seq(9))
-        pair
-      }
-    // measured NOTE: the full-Jones term's dimension-staging shape was
-    // A/B'd here too and LOST (2.5 → 2.9 s at sf0.1) — the diagonal
-    // blend is one cheap codegen'd element_at chain per row and its
-    // sandwich references it only twice, so the distinct + checkpoint +
-    // join overhead exceeds the saving. Inline per-row staging stays.
-    val out = BeamCubeTerm.stageCoords(df, reP, lmZoom)
-    BeamCubeTerm.gatherBlend(out, reP, imP, "bce")
-  }
+  private def corrs: Seq[String] =
+    elements.map(graft.functions.StokesConvert.StokesTypes(_).toLowerCase)
 
-  /** Round 14: when the compiler offers the dimension product, the
-    * diagonal blend is computed ON THE DRIVER (the FullBeamCubeTerm
-    * path — coordsLocal/blendLocal, BeamBlendLocalSpec-pinned
-    * bit-identical) and broadcast-joined back. The r13 dimension-staging
-    * loss came from the distinct + checkpoint Catalyst pipeline, which
-    * the driver computation removes. */
-  override def stageWithDims(df: DataFrame, side: String,
-                             dims: () => DataFrame): DataFrame = {
-    if (df.columns.contains("bce_re")) return df
-    val (reP, imP) =
-      if (regenerate) BeamFixture.ensurePair(schema)
-      else {
-        val Seq((_, pair)) = Fits.beamFilenames(schema, Seq(9))
-        pair
-      }
+  /** The staged blends depend only on the (src, chan[, ddid]) dimension
+    * keys, so the staging table comes straight from the dimension product
+    * (unique per key by the join-back contract; product rows whose keys
+    * never appear in the data are dropped by the inner join-back) — no
+    * scan of the data-sized expanded frame inside the plan build.
+    *
+    * The blends are computed ON THE DRIVER (coordsLocal/blendLocal) and
+    * broadcast-joined back, so the expensive gather/renorm runs once per
+    * dimension key and the sandwich downstream references plain join
+    * ATTRIBUTES — inlined per expanded row, CollapseProject copies each
+    * blend ~6× into the 2×2 E·B·Eᴴ and the generated method passes the
+    * 8 KB JIT threshold (measured 16.1 s vs 1.9 s at sf0.1; the AuditSpec
+    * catch). Computing the table in a Catalyst pipeline instead cost
+    * ~2.6 s WARM per plan build (optimizer/CSE walks over blend trees
+    * embedding 405-double array literals). Every mirrored operation is
+    * IEEE-exact (+,−,×,/, sqrt, compares, floor/cast — class (a)), so the
+    * staged doubles are bit-identical to the Column pipeline
+    * (stageCoords/gatherBlend); BeamBlendLocalSpec pins the equality over
+    * the live fixture, and x12/x14/x17 keep their strict hash gates. */
+  override def stage(df: DataFrame, side: String,
+                     dims: () => DataFrame): DataFrame = {
+    if (df.columns.contains(s"bce_${corrs.head}_re")) return df // one beam, both sides
+    val files =
+      if (regenerate) BeamFixture.ensureCorrs(schema, elements)
+      else Fits.beamFilenames(schema, elements)
+    // grouped MS (x17): the same chan NUMBER carries a different freq per
+    // DATA_DESC_ID, so the dimension key must include ddid or the
+    // join-back would cross-match SPWs (and duplicate rows)
     val keys = Seq("src_id", "chan") ++
       (if (df.columns.contains("ddid")) Seq("ddid") else Nil)
     val dim = dims().select((keys ++ Seq("l", "m", "freq")).map(col): _*)
-    val spark = df.sparkSession
-    val hdu = Fits.read(reP)
-    val reC = Fits.beamCube(reP); val imC = Fits.beamCube(imP)
-    val out = dim.collect().map { r =>
+    val cubes = files.map { case (_, (reP, imP)) =>
+      (Fits.beamCube(reP), Fits.beamCube(imP))
+    }
+    val hdu = Fits.read(files.head._2._1)
+    val out = dim.collect().map { r => // dimension product: model-sized
       val co = BeamCubeTerm.coordsLocal(
         r.getDouble(keys.size), r.getDouble(keys.size + 1),
-        r.getDouble(keys.size + 2), hdu, reC, lmZoom)
-      val (re, im) = BeamCubeTerm.blendLocal(co, reC, imC)
-      Row.fromSeq((0 until keys.size).map(r.get) ++ Seq(re, im))
-    }
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val pinnedSchema = StructType(
-      keys.map(k => dim.schema(k)) :+
-        StructField("bce_re", DoubleType) :+ StructField("bce_im", DoubleType))
-    val pinned = spark.createDataFrame(
-      java.util.Arrays.asList(out.toIndexedSeq: _*), pinnedSchema)
-    df.join(broadcast(pinned), keys)
-  }
-
-  def jones(src: Column, time: Column, ant: Column, side: String): Jones2x2 = {
-    val e = CxCol(col("bce_re"), col("bce_im"))
-    Jones2x2(e, Cx.zero, Cx.zero, e)
-  }
-}
-
-/** FULL-Jones beam term: the four E-matrix ELEMENT cubes of a MeqTrees
-  * beamset (xx/xy/yx/yy, each a re/im file pair via the filename schema)
-  * sampled independently with the same trilinear-gather + per-element
-  * amplitude renormalization as [[BeamCubeTerm]], assembled into the
-  * full 2×2 Jones the compiler sandwiches as E·B·Eᴴ — off-diagonal
-  * leakage included, where the single-pair term was diagonal. Geometry
-  * staging is shared; the only addition is three more gather/blend
-  * passes over three more broadcast-constant voxel arrays (all
-  * model-sized at any data scale). */
-final case class FullBeamCubeTerm(schema: String, lmZoom: Double,
-                                  regenerate: Boolean = true)
-    extends RimeCompiler.DdeTerm {
-
-  override def stage(df: DataFrame, side: String): DataFrame =
-    stageFrom(df,
-      df.select((dimKeys(df) ++ Seq("l", "m", "freq")).map(col): _*)
-        .distinct())
-
-  /** Round 14: the staged blends depend only on the (src, chan[, ddid])
-    * dimension keys, so when the compiler offers the dimension product
-    * the staging table comes straight from it — unique per key by the
-    * join-back contract, no distinct, and crucially NO scan of the
-    * data-sized expanded frame inside the plan build (the old distinct
-    * ran a full MAIN pass per staging). Extra product rows whose keys
-    * never appear in the data are dropped by the inner join-back. */
-  override def stageWithDims(df: DataFrame, side: String,
-                             dims: () => DataFrame): DataFrame =
-    stageFrom(df,
-      dims().select((dimKeys(df) ++ Seq("l", "m", "freq")).map(col): _*))
-
-  // grouped MS (x17): the same chan NUMBER carries a different freq per
-  // DATA_DESC_ID, so the dimension key must include ddid or the
-  // join-back would cross-match SPWs (and duplicate rows)
-  private def dimKeys(df: DataFrame): Seq[String] =
-    Seq("src_id", "chan") ++
-      (if (df.columns.contains("ddid")) Seq("ddid") else Nil)
-
-  private def stageFrom(df: DataFrame, dim: DataFrame): DataFrame = {
-    if (df.columns.contains("bce_xx_re")) return df // one beam, both sides
-    val quad =
-      if (regenerate) BeamFixture.ensureQuad(schema)
-      else Fits.beamFilenames(schema, Seq(9, 10, 11, 12))
-    // the beam E depends on (source, chan) ONLY — stage the four
-    // renormalized blends on the DIMENSION frame (nsrc × nchan rows) and
-    // broadcast-join them back, so the expensive gather/renorm
-    // expressions evaluate 45 times instead of once per expanded
-    // (row × src × chan) row AND the sandwich downstream references
-    // plain join ATTRIBUTES — without this, CollapseProject inlines each
-    // blend ~6× into the 2×2 E·B·Eᴴ and the generated method passes the
-    // 8 KB JIT threshold (measured 16.1 s vs 1.9 s at sf0.1; the
-    // AuditSpec catch that motivated this shape).
-    //
-    // Round 14: the blends are computed ON THE DRIVER
-    // (BeamCubeTerm.blendLocal) instead of through a localCheckpointed
-    // Catalyst pipeline — the old pin job alone cost ~2.6 s WARM per
-    // plan build, dominated by optimizer/CSE walks over blend trees
-    // embedding eight 405-double array literals (every subtree equality
-    // compares whole arrays). Every mirrored operation is IEEE-exact
-    // (+,−,×,/, sqrt, compares, floor/cast — class (a)), so the staged
-    // doubles are bit-identical to the Column pipeline by IEEE
-    // semantics; BeamBlendLocalSpec pins the equality over the live
-    // fixture, and x14/x17 keep their strict hash gates.
-    val keys = dimKeys(df)
-    val spark = df.sparkSession
-    val dimRows = dim.collect() // dimension product: model-sized
-    val cubes = quad.map { case (corr, (reP, imP)) =>
-      (corr, Fits.beamCube(reP), Fits.beamCube(imP))
-    }
-    val hdu = Fits.read(quad.head._2._1)
-    val out = dimRows.map { r =>
-      val co = BeamCubeTerm.coordsLocal(
-        r.getDouble(keys.size), r.getDouble(keys.size + 1),
-        r.getDouble(keys.size + 2), hdu, cubes.head._2, lmZoom)
-      val blends = cubes.flatMap { case (_, reC, imC) =>
+        r.getDouble(keys.size + 2), hdu, cubes.head._1, lmZoom)
+      val blends = cubes.flatMap { case (reC, imC) =>
         val (re, im) = BeamCubeTerm.blendLocal(co, reC, imC)
         Seq(re, im)
       }
       Row.fromSeq((0 until keys.size).map(r.get) ++ blends)
     }
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
     val pinnedSchema = StructType(
-      keys.map(k => dim.schema(k)) ++ quad.flatMap { case (c, _) =>
+      keys.map(k => dim.schema(k)) ++ corrs.flatMap { c =>
         Seq(StructField(s"bce_${c}_re", DoubleType),
           StructField(s"bce_${c}_im", DoubleType)) })
-    val pinned = spark.createDataFrame(
+    val pinned = df.sparkSession.createDataFrame(
       java.util.Arrays.asList(out.toIndexedSeq: _*), pinnedSchema)
     df.join(broadcast(pinned), keys)
   }
 
-  def jones(src: Column, time: Column, ant: Column, side: String): Jones2x2 =
-    Jones2x2(
-      CxCol(col("bce_xx_re"), col("bce_xx_im")),
-      CxCol(col("bce_xy_re"), col("bce_xy_im")),
-      CxCol(col("bce_yx_re"), col("bce_yx_im")),
-      CxCol(col("bce_yy_re"), col("bce_yy_im")))
+  def jones(src: Column, time: Column, ant: Column, side: String): Jones2x2 = {
+    def e(c: String) = CxCol(col(s"bce_${c}_re"), col(s"bce_${c}_im"))
+    if (elements == BeamCubeTerm.Diagonal) Jones2x2(e("xx"), Cx.zero, Cx.zero, e("xx"))
+    else Jones2x2(e("xx"), e("xy"), e("yx"), e("yy"))
+  }
 }
 
 object BeamCubeTerm {
+  /** Element sets as casacore Stokes ids (9 = XX … 12 = YY). */
+  val Diagonal: Seq[Int] = Seq(9)
+  val FullJones: Seq[Int] = Seq(9, 10, 11, 12)
+
   /** Corner enumeration shared with the oracle-SQL generator — the order
     * fixes the blend's expression tree on both engines. */
   val corners: Seq[(String, Int, Int, Int)] =
@@ -282,10 +203,13 @@ object BeamCubeTerm {
     else (wre * (wabs / den), wim * (wabs / den))
   }
 
-  /** Shared geometry staging: derive the per-(source, chan) sampling
-    * coordinates (frequency bracket + weight, snap-clamped pixel cells +
-    * fractions) from the cube header — freq_grid_interp
-    * (fast_beam_cubes.py:10-54) plus the reference's edge handling. */
+  /** Column-pipeline REFERENCE for [[coordsLocal]]: derive the
+    * per-(source, chan) sampling coordinates (frequency bracket + weight,
+    * snap-clamped pixel cells + fractions) from the cube header —
+    * freq_grid_interp (fast_beam_cubes.py:10-54) plus the reference's
+    * edge handling. Nothing in the engine stages through it; it stays as
+    * the independent Spark-expression statement of the sampler that
+    * BeamBlendLocalSpec compares the driver mirror against, bit for bit. */
   private[graft] def stageCoords(df: DataFrame, reP: String,
                                 lmZoom: Double): DataFrame = {
     val hdu = Fits.read(reP)
@@ -313,13 +237,7 @@ object BeamCubeTerm {
         (acc, k) => when(i === k.toLong, lit(freqs(k + off))).otherwise(acc)
       }
     // spatial map: pix = (crpix-1) + zoom·l·fscale / (cdelt·π/180),
-    // snap-clamped to the grid (the reference's edge handling).
-    // NOTE (round 14, measured): keep the step-by-step withColumn form —
-    // each derived column stays its OWN projection slot that per-row
-    // codegen evaluates once. A collapsed single-select variant (corner
-    // lookups inlined into the blends) ran x12's DATA-sized inline
-    // staging 3× SLOWER: CollapseProject does NOT re-inline multi-use
-    // non-cheap columns, so the separate slots are load-bearing.
+    // snap-clamped to the grid (the reference's edge handling)
     def pixCols(lm: Column, crpix: Double, cdeltDeg: Double, n: Int,
                 p: String): DataFrame => DataFrame = { d =>
       val raw = lit(crpix) +
@@ -344,17 +262,14 @@ object BeamCubeTerm {
     out
   }
 
-  /** Shared 8-corner gather + trilinear blend + amplitude
-    * renormalization for ONE complex cube pair, appending
+  /** Column-pipeline REFERENCE for [[blendLocal]]: 8-corner gather +
+    * trilinear blend + amplitude renormalization for ONE complex cube
+    * pair over [[stageCoords]]'s columns, appending
     * `<prefix>_re`/`<prefix>_im`. The voxel table is a dense
     * (nx, ny, nFreq) grid, so each corner is a direct flat-index
-    * lookup — ship the cube as two literal arrays (executor-constant,
-    * like the reference's in-memory beam) and gather with codegen'd
-    * element_at instead of 8 broadcast hash joins. The values are
-    * COLLECTED from the same Spark-side r4-rounding pipeline the join
-    * version read, so every double on the hashed surface is
-    * bit-identical to the join plan; the collect is cube-sized (405
-    * voxels per file) — dimension-table bounded at any data scale. */
+    * element_at lookup into two literal arrays. Like [[stageCoords]] it
+    * is kept only as what BeamBlendLocalSpec compares the driver mirror
+    * against; the engine stages through [[BeamCubeTerm.stage]]. */
   private[graft] def gatherBlend(df: DataFrame, reP: String, imP: String,
                                 prefix: String): DataFrame = {
     val reCube = Fits.beamCube(reP)
@@ -362,14 +277,9 @@ object BeamCubeTerm {
     require(reCube.nFreq == imCube.nFreq && reCube.npixX == imCube.npixX &&
       reCube.npixY == imCube.npixY, "re/im cube geometry mismatch")
     val nx = reCube.npixX; val ny = reCube.npixY
-    // r4 shared rationals — the r16-proven bucket for file-vs-closed-form.
-    // The voxels are ALREADY driver-resident JVM arrays (Fits.beamCube),
-    // so the rounding runs on the driver (Det.r4Local — the bit-identical
-    // mirror of the Column form, DeterminismSpec-pinned) instead of
-    // shipping 405 values through a toDF + collect Spark JOB per cube
-    // pair; plan builds that stage 1-4 cubes (x12/x14/x17/p01) lose 1-4
-    // serial jobs each (round 14, guide §5 — the driver should do
-    // model-sized work itself, not schedule it).
+    // r4 shared rationals — the r16-proven bucket for file-vs-closed-form
+    // (Det.r4Local: the bit-identical mirror of the Column form,
+    // DeterminismSpec-pinned)
     val reArr = Array.ofDim[Double](nx * ny * reCube.nFreq)
     val imArr = Array.ofDim[Double](nx * ny * reCube.nFreq)
     for (f <- 0 until reCube.nFreq; y <- 0 until ny; x <- 0 until nx) {
@@ -378,8 +288,6 @@ object BeamCubeTerm {
       imArr(i) = Det.r4Local(imCube.value(x, y, f))
     }
     val (reLit, imLit) = (typedLit(reArr.toSeq), typedLit(imArr.toSeq))
-    // step-by-step projection slots, NOT a collapsed single select — see
-    // the pixCols note (measured 3× on x12's data-sized inline staging)
     var out = df
     for ((nm, a, b, c) <- corners) {
       val idx = (((col("bcf0") + c) * ny + (col("bcm0") + b)) * nx +

@@ -103,18 +103,14 @@ object RimeCompiler {
   trait DdeTerm extends Serializable {
     /** Transform the expanded frame for one side ("p"/"q"). Called once
       * per side BEFORE the source sum; must be idempotent when the term's
-      * columns are side-independent. */
-    def stage(df: DataFrame, side: String): DataFrame = df
-    /** Dimension-aware staging hook (round 14): `dims` builds the
-      * src × chans DIMENSION product (every (src_id, chan[, ddid]) key
-      * with its l/m/freq columns, unique per key by the same contract
-      * that makes the join-back keys unique). A term whose staged columns
-      * depend only on those keys can derive its staging table from it
-      * directly — where the old path ran a distinct over the EXPANDED
-      * (data-sized) frame, i.e. a full MAIN scan inside every plan
-      * build. Default delegates to [[stage]]. */
-    def stageWithDims(df: DataFrame, side: String,
-                      dims: () => DataFrame): DataFrame = stage(df, side)
+      * columns are side-independent. `dims` builds the src × chans
+      * DIMENSION product (every (src_id, chan[, ddid]) key with its
+      * l/m/freq columns, unique per key by the same contract that makes
+      * the join-back keys unique): a term whose staged columns depend
+      * only on those keys derives its staging table from it, never from
+      * a distinct over the EXPANDED (data-sized) frame, which would run a
+      * full MAIN scan inside every plan build. */
+    def stage(df: DataFrame, side: String, dims: () => DataFrame): DataFrame = df
     def jones(src: Column, time: Column, ant: Column, side: String): Jones2x2
   }
 
@@ -391,13 +387,13 @@ object RimeCompiler {
     // stage the DDE terms' broadcast joins / derived columns (term
     // protocol setup) before the source sum; then the K phase columns.
     // Terms whose staging depends only on the (src, chan) dimension keys
-    // receive the dimension product (round 14 — see DdeTerm.stageWithDims)
-    // so their staging never scans the data-sized expanded frame.
+    // receive the dimension product (see DdeTerm.stage) so their
+    // staging never scans the data-sized expanded frame.
     val dims = () => src.crossJoin(chans)
     val expandedStaged =
       (spec.leftDde.map((_, "p")) ++ spec.rightDde.map((_, "q")))
         .foldLeft(expanded0) { case (df, (c, side)) =>
-          terms(c).stageWithDims(df, side, dims) }
+          terms(c).stage(df, side, dims) }
     val expanded = kCols match {
       case Some((kre, kim)) => expandedStaged
         .withColumn("rime_k_re", kre).withColumn("rime_k_im", kim)

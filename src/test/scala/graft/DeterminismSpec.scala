@@ -91,7 +91,7 @@ class DeterminismSpec extends AnyFunSuite {
         import graft.io.BeamFixture
         (for (f <- 0 until BeamFixture.NFreq; y <- 0 until BeamFixture.NPix;
               x <- 0 until BeamFixture.NPix)
-          yield BeamFixture.beamValue(x, y, f))
+          yield BeamFixture.beamValueCorr("xx", false, x, y, f))
           .map(v => math.abs(math.abs(v * 1e4 - math.floor(v * 1e4)) - 0.5)).min
       }
       info(s"$d: r15 basis min |frac(x·1e6)−.5| = $mBasis, " +

@@ -44,7 +44,7 @@ class FitsIoSpec extends AnyFunSuite {
     assert(cube.freqs(1) === 856e6 + 214e6 + 1e5, "GFREQ jitter not applied")
     // data layout: value(x, y, f) must reproduce the generator
     for (f <- 0 until cube.nFreq; y <- 0 until cube.npixY; x <- 0 until cube.npixX)
-      assert(cube.value(x, y, f) === BeamFixture.beamValue(x, y, f),
+      assert(cube.value(x, y, f) === BeamFixture.beamValueCorr("xx", false, x, y, f),
         s"value mismatch at ($x, $y, $f)")
     // beam is radially symmetric and peaks at centre — an axis flip or
     // transposed layout would break either property
@@ -175,11 +175,13 @@ class FitsIoSpec extends AnyFunSuite {
     val term = BeamCubeTerm(schema, lmZoom = 1.0, regenerate = false)
     import spark.implicits._
     val probes = Seq(
-      (0.0, 0.0, g.gfreq(0)),                       // centre voxel, first plane
-      (0.0, 0.0, (g.gfreq(1) + g.gfreq(2)) / 2.0),  // centre, between planes
-      (math.toRadians(g.lDeg(6)), 0.0, g.gfreq(0))) // off-centre pixel
-      .toDF("l", "m", "freq")
-    val staged = term.stage(probes, "p").select("l", "freq", "bce_re", "bce_im")
+      (0L, 0L, 0.0, 0.0, g.gfreq(0)),                       // centre voxel, first plane
+      (1L, 0L, 0.0, 0.0, (g.gfreq(1) + g.gfreq(2)) / 2.0),  // centre, between planes
+      (2L, 0L, math.toRadians(g.lDeg(6)), 0.0, g.gfreq(0))) // off-centre pixel
+      .toDF("src_id", "chan", "l", "m", "freq")
+    // the probes are their own (src_id, chan) dimension frame
+    val staged = term.stage(probes, "p", () => probes)
+      .select("l", "freq", "bce_xx_re", "bce_xx_im")
       .collect().map(r => (r.getDouble(0), r.getDouble(1)) ->
         (r.getDouble(2), r.getDouble(3))).toMap
     // centre of the beam is exactly 1 at every frequency (r = 0), and the

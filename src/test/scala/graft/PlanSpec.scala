@@ -165,9 +165,9 @@ class PlanSpec extends AnyFunSuite {
     val p = planOf("x12_fused_rime_beam")
     assert(!p.contains("SortMergeJoin"))
     assert(!p.contains("Exchange SinglePartition"))
-    // round 14: the 8-corner gather/renorm no longer evaluates per
-    // expanded row AT ALL — the (src × chan) blend table is computed on
-    // the driver (BeamCubeTerm.blendLocal, IEEE-exact mirror pinned by
+    // the 8-corner gather/renorm never evaluates per expanded row — the
+    // diagonal BeamCubeTerm's stage computes the (src × chan) blend table
+    // on the driver (blendLocal, IEEE-exact mirror pinned by
     // BeamBlendLocalSpec) and hands the stream ONE dimension-sized
     // broadcast join (LocalTableScan build side); the only wide exchange
     // stays the source sum
@@ -509,10 +509,10 @@ class PlanSpec extends AnyFunSuite {
     // the round-7 inlining lesson: the four gather/renorm chains must
     // NOT evaluate per expanded row — they live in a (src × chan) blend
     // table that broadcast-joins onto the stream, and no single-partition
-    // funnel may appear. Round 14 computes that table ON THE DRIVER
-    // (BeamCubeTerm.blendLocal — a LocalTableScan leaf, no staging job,
-    // no giant-literal analysis walk); BeamBlendLocalSpec pins the
-    // driver mirror bit-exact against the Column pipeline.
+    // funnel may appear. The full-Jones BeamCubeTerm's stage computes
+    // that table ON THE DRIVER (blendLocal — a LocalTableScan leaf, no
+    // staging job, no giant-literal analysis walk); BeamBlendLocalSpec
+    // pins the driver mirror bit-exact against the Column pipeline.
     val p = planOf("x14_fused_rime_beam_full")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
       "x14 beam table must broadcast-join:\n" + p.take(3000))
