@@ -128,7 +128,7 @@ object Env {
   def sweepSession(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+      .foreach(org.apache.spark.graft.Blocks.release)
     System.gc()
   }
 

@@ -5,15 +5,24 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{DeclarativeAggregate, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Native Catalyst extensions — the "custom Expression beats UDF" tier of
   * SURVEY §7.3 — registered through `SparkSessionExtensions` (class
   * `GraftExtensions`) or directly on a live session
   * (`GraftFunctions.register`).
+  *
+  * The per-row kernels are plain objects with one `compute` each, run by
+  * the one [[KernelCall]] expression through a row of the kernel table
+  * `GraftFunctions.kernels`. An expression class of its own is kept only
+  * where a kernel needs a constructor constant (`LshCode`,
+  * `RimeSourceSum`, `ChanBinAvg`), inline generated code (`Sinc`) or an
+  * aggregate buffer (`KahanSum`, `KmvMinHashes`, `ScatterMoments`).
   */
 
 /** sinc(x) = sin(x)/x (1 at 0) — the decorrelation kernel of the BDA
@@ -147,27 +156,73 @@ case class LshCode(child: Expression, nbits: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** A per-row kernel as one codegen'd expression: `name` is a row of
+  * [[GraftFunctions.kernels]], which gives the result type, the input
+  * types and the object whose one `compute` runs. The generated code is
+  * one static call `graft.expr.X.compute(args)`, with `.toString()` on
+  * the arguments whose parameter is a `String`; the interpreted path
+  * invokes the same method, resolved once per kernel. A null argument
+  * gives a null result. Equal on `(name, children)` alone, so CSE and
+  * exchange reuse see equal calls. */
+case class KernelCall(name: String, children: Seq[Expression])
+    extends Expression with ExpectsInputTypes {
+  @transient private lazy val kernel = GraftFunctions.kernel(name)
+
+  override def dataType: DataType = kernel.dataType
+  override def inputTypes: Seq[DataType] = kernel.inputTypes
+  override def prettyName: String = name
+  override protected def stringArgs: Iterator[Any] = children.iterator
+  override def nullable: Boolean = children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
+
+  override def eval(input: InternalRow): Any = {
+    val args = new Array[AnyRef](children.length)
+    var i = 0
+    while (i < args.length) {
+      val v = children(i).eval(input)
+      if (v == null) return null
+      args(i) = if (kernel.stringArg(i)) v.toString else v.asInstanceOf[AnyRef]
+      i += 1
+    }
+    try kernel.method.invoke(kernel.impl, args: _*)
+    catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val gens = children.map(_.genCode(ctx))
+    val args = gens.indices.map(i =>
+      if (kernel.stringArg(i)) s"${gens(i).value}.toString()" else s"${gens(i).value}")
+    val call = s"${ev.value} = ${kernel.target}.compute(${args.mkString(", ")});"
+    val decl = s"${CodeGenerator.javaType(dataType)} ${ev.value} = " +
+      s"${CodeGenerator.defaultValue(dataType)};"
+    if (nullable) {
+      // the nesting of Binary/TernaryExpression.nullSafeCodeGen: each
+      // child is evaluated only when the ones before it are non-null
+      val body = children.zip(gens).foldRight(s"${ev.isNull} = false;\n$call") {
+        case ((c, g), inner) =>
+          s"${g.code}\n" + ctx.nullSafeExec(c.nullable, g.isNull.toString)(inner)
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $decl
+        $body""")
+    } else
+      ev.copy(code = code"""
+        ${gens.map(_.code.toString).mkString("\n")}
+        $decl
+        $call""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): KernelCall = copy(children = newChildren)
+}
+
 /** Rolling positional document fingerprint Σ cp(i)·((i·2654435761) mod
   * 2²⁰ + 1) mod 2³⁰ over 1-based CHARACTER positions (code points, the
   * same character semantics as substr/ascii on both engines) — one
   * codegen pass over the string; the declarative `aggregate(sequence(1,
   * length(text)), …)` form walked an interpreted lambda per character
   * and was a bench hot spot. Exact integer arithmetic, oracle unchanged. */
-case class RollingFingerprint(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rolling_fp"
-
-  override protected def nullSafeEval(input: Any): Any =
-    RollingFingerprint.compute(input.toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expr.RollingFingerprint.compute($c.toString());")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingFingerprint =
-    copy(child = newChild)
-}
-
 object RollingFingerprint {
   def compute(s: String): Long = {
     var acc = 0L
@@ -194,23 +249,6 @@ object RollingFingerprint {
   * re-group by doc) and walked an interpreted `aggregate(sequence…)`
   * lambda per token; a document's tokens all live in its own row, so the
   * whole signature is a zero-shuffle projection. */
-case class SimHash8(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash8"
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    SimHash8.compute(input.toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expr.SimHash8.compute($c.toString());")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash8 =
-    copy(child = newChild)
-}
-
 object SimHash8 {
   def compute(s: String): Long = {
     // split(" ", -1) keeps interior/trailing empty tokens, matching both
@@ -260,23 +298,6 @@ object SimHash8 {
   * the 100x replica — a document's tokens all live in its own row, so the
   * statistics are a projection. Per-row state is one token-count hash map
   * bounded by the document's own length. */
-case class GopherStats(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "gopher_stats"
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    GopherStats.compute(input.toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expr.GopherStats.compute($c.toString());")
-
-  override protected def withNewChildInternal(newChild: Expression): GopherStats =
-    copy(child = newChild)
-}
-
 object GopherStats {
   def compute(s: String): ArrayData = {
     val counts = new java.util.HashMap[String, Long]()
@@ -306,24 +327,6 @@ object GopherStats {
   * length(pat)` computes (both engines' replace() scans left-to-right,
   * non-overlapping), without allocating the replaced string per row.
   * Pattern must be a non-empty literal. */
-case class SubstrCount(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "substr_count"
-  override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
-
-  override protected def nullSafeEval(s: Any, pat: Any): Any =
-    SubstrCount.compute(s.toString, pat.toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, p) =>
-      s"${ev.value} = graft.expr.SubstrCount.compute($s.toString(), $p.toString());")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SubstrCount =
-    copy(left = newLeft, right = newRight)
-}
-
 object SubstrCount {
   def compute(s: String, pat: String): Long = {
     require(pat.nonEmpty, "substr_count: empty pattern")
@@ -344,23 +347,6 @@ object SubstrCount {
   * same order as the lowercase-hex strings both engines' md5() emit, so
   * the output is bit-identical to the explode + distinct + 4-aggregation
   * form (CurationPipelineSpec pins it) at zero shuffle. */
-case class MinHash4(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "minhash4"
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    MinHash4.compute(input.toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expr.MinHash4.compute($c.toString());")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHash4 =
-    copy(child = newChild)
-}
-
 object MinHash4 {
   private val Prefixes = Array[Byte]('a', 'b', 'c', 'd')
 
@@ -414,38 +400,6 @@ object MinHash4 {
   }
 }
 
-/** Per-document bigram fsum Σᵢ terms[cp(i)·128 + cp(i+1)] over adjacent
-  * character pairs — one codegen pass over the string against a
-  * 16 384-slot long LUT (the alphabet²-bounded bigram model, built once
-  * and broadcast as a one-row array). The declarative forms both lose:
-  * explode + join re-shuffles a corpus-chars-sized relation, and
-  * `aggregate(sequence…, element_at(map…))` walks an interpreted lambda
-  * with an O(|Σ|²) linear map probe per character. ASCII-only by
-  * contract (the corpus precondition DeterminismSpec asserts); a
-  * code point ≥ 128 throws rather than silently diverging from the
-  * substr-based oracle. */
-case class BigramFsum(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "bigram_fsum"
-  // reject misuse at analysis time — without this a non-string text or
-  // non-array<long> LUT fails inside codegen (ArrayData.getLong)
-  override def inputTypes: Seq[DataType] =
-    Seq(StringType, ArrayType(LongType))
-
-  override protected def nullSafeEval(text: Any, arr: Any): Any =
-    BigramFsum.compute(text.toString,
-      arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, a) =>
-      s"${ev.value} = graft.expr.BigramFsum.compute($t.toString(), $a);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BigramFsum =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Winnowing fingerprint selection (Schleimer 2003 / MOSS) as ONE codegen
   * pass per document: char-5-gram polynomial hashes h(i) over 1-based
   * code-point positions, every w=4 window [i−3, i] selects its rightmost
@@ -457,25 +411,6 @@ case class BigramFsum(left: Expression, right: Expression)
   * windows×positions-join formulation (kept as the DuckDB oracle) carries
   * the full text through a corpus-chars-sized explode; this is the same
   * integer arithmetic with zero shuffle. */
-case class WinnowFps(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pos", LongType, nullable = false),
-    StructField("fp", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "winnow_fps"
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-
-  override protected def nullSafeEval(input: Any): Any =
-    WinnowFps.compute(input.toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expr.WinnowFps.compute($c.toString());")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowFps =
-    copy(child = newChild)
-}
-
 object WinnowFps {
   private val W = 4 // hashes per window
   def compute(s: String): ArrayData = {
@@ -521,25 +456,6 @@ object WinnowFps {
   * Inputs shorter than k yield an empty array (callers guard length
   * anyway; the transform form would have produced a descending sequence
   * there, which every call site filters out beforehand). */
-case class CharGrams(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "char_grams"
-  override def inputTypes: Seq[DataType] =
-    Seq(StringType, org.apache.spark.sql.types.IntegerType)
-
-  override protected def nullSafeEval(text: Any, k: Any): Any =
-    CharGrams.compute(text.toString, k.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, k) =>
-      s"${ev.value} = graft.expr.CharGrams.compute($t.toString(), $k);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CharGrams =
-    copy(left = newLeft, right = newRight)
-}
-
 object CharGrams {
   def compute(s: String, k: Int): ArrayData = {
     val n = s.length - k + 1
@@ -560,27 +476,6 @@ object CharGrams {
   * the codegen'd replacement for `transform(sequence(1, size(tk) - k +
   * 1), i -> concat_ws(' ', slice(tk, i, k)))`, same HOF rationale as
   * [[CharGrams]]. */
-case class WordGrams(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_grams"
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(StringType), org.apache.spark.sql.types.IntegerType)
-
-  override protected def nullSafeEval(arr: Any, k: Any): Any =
-    WordGrams.compute(
-      arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      k.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, k) =>
-      s"${ev.value} = graft.expr.WordGrams.compute($a, $k);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): WordGrams =
-    copy(left = newLeft, right = newRight)
-}
-
 object WordGrams {
   def compute(a: org.apache.spark.sql.catalyst.util.ArrayData, k: Int): ArrayData = {
     val n = a.numElements() - k + 1
@@ -616,27 +511,6 @@ object WordGrams {
   * ANY element of the candidate array; no allocation in the loop.
   * `TokenCtSpec` pins equality with the HOF expression over the real
   * corpus and an edge grid (multi-space, ends, unicode, empty). */
-case class TokenCtIn(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def prettyName: String = "token_ct_in"
-  override def inputTypes: Seq[DataType] =
-    Seq(StringType, ArrayType(StringType))
-
-  override protected def nullSafeEval(text: Any, set: Any): Any =
-    TokenCtIn.compute(
-      text.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      set.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, s) =>
-      s"${ev.value} = graft.expr.TokenCtIn.compute($t, $s);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TokenCtIn =
-    copy(left = newLeft, right = newRight)
-}
-
 object TokenCtIn {
   def compute(text: org.apache.spark.unsafe.types.UTF8String,
       set: ArrayData): Int = {
@@ -688,28 +562,6 @@ object TokenCtIn {
   * drop 'utm1=…'; the oracle therefore uses starts_with/ESCAPE'd LIKE).
   * `GraftExpressionsSpec` pins equality with the startswith HOF form
   * over the generated URL corpus and an edge grid incl. 'utmX=…'. */
-case class DropPrefixed(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "drop_prefixed"
-  override def inputTypes: Seq[DataType] =
-    Seq(StringType, StringType, StringType)
-
-  override protected def nullSafeEval(text: Any, delim: Any, prefix: Any): Any =
-    DropPrefixed.compute(
-      text.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      delim.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      prefix.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, d, p) =>
-      s"${ev.value} = graft.expr.DropPrefixed.compute($t, $d, $p);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): DropPrefixed =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object DropPrefixed {
   def compute(text: org.apache.spark.unsafe.types.UTF8String,
       delim: org.apache.spark.unsafe.types.UTF8String,
@@ -756,25 +608,6 @@ object DropPrefixed {
   * Math.ceil + truncating long cast, char count not byte count) so the
   * result is bit-identical for every k, not just the exact-power-of-two
   * divisions. Empty array → 0 (the lambda's zero seed); null → null. */
-case class SubwordSum(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "subword_sum"
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(StringType), org.apache.spark.sql.types.IntegerType)
-
-  override protected def nullSafeEval(arr: Any, k: Any): Any =
-    SubwordSum.compute(arr.asInstanceOf[ArrayData], k.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, k) =>
-      s"${ev.value} = graft.expr.SubwordSum.compute($a, $k);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SubwordSum =
-    copy(left = newLeft, right = newRight)
-}
-
 object SubwordSum {
   def compute(a: ArrayData, k: Int): Long = {
     val n = a.numElements()
@@ -801,27 +634,6 @@ object SubwordSum {
   * then the double→long truncating cast. `QuantSpec` pins equality with
   * the transform expression over the real corpus and the .5/negative
   * edge grid. */
-case class QQuant(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "qquant"
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(org.apache.spark.sql.types.FloatType), DoubleType)
-
-  override protected def nullSafeEval(arr: Any, scale: Any): Any =
-    QQuant.compute(
-      arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      scale.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, s) =>
-      s"${ev.value} = graft.expr.QQuant.compute($a, $s);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): QQuant =
-    copy(left = newLeft, right = newRight)
-}
-
 object QQuant {
   def compute(a: org.apache.spark.sql.catalyst.util.ArrayData,
               scale: Double): ArrayData = {
@@ -849,27 +661,6 @@ object QQuant {
   * route as Spark's round(), which agrees with DuckDB ROUND on the
   * bit-identical IEEE quotient (the qquant-proven class). A zero
   * denominator (all-zero vector) maps to all-zero codes. */
-case class Sq8Quant(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "sq8"
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType), LongType)
-
-  override protected def nullSafeEval(arr: Any, denom: Any): Any =
-    Sq8Quant.compute(
-      arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      denom.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, d) =>
-      s"${ev.value} = graft.expr.Sq8Quant.compute($a, $d);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Sq8Quant =
-    copy(left = newLeft, right = newRight)
-}
-
 object Sq8Quant {
   def compute(a: org.apache.spark.sql.catalyst.util.ArrayData,
               denom: Long): ArrayData = {
@@ -896,26 +687,6 @@ object Sq8Quant {
   * per-pair lambda dispatch made the within-cluster cosine scans of the
   * embedding suite the single-threaded bottleneck of the 10× scale gate.
   * Same exact long sum, so every hashed surface is unchanged. */
-case class QDot(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "qdot"
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    QDot.compute(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expr.QDot.compute($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): QDot =
-    copy(left = newLeft, right = newRight)
-}
-
 object QDot {
   def compute(a: org.apache.spark.sql.catalyst.util.ArrayData,
               b: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
@@ -929,26 +700,6 @@ object QDot {
 
 /** Exact integer squared-L2 distance of two `array<long>` columns — the
   * codegen'd sibling of [[QDot]] for the centroid-assignment scans. */
-case class QL2(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "ql2"
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    QL2.compute(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expr.QL2.compute($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): QL2 =
-    copy(left = newLeft, right = newRight)
-}
-
 object QL2 {
   def compute(a: org.apache.spark.sql.catalyst.util.ArrayData,
               b: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
@@ -972,28 +723,6 @@ object QL2 {
   * Distance is exact integer L2; `ks` ascending + strict `<` keeps ties
   * at the lowest centroid id (the e05 rule, same as the retired RDD
   * loop). Dim mismatch throws rather than silently truncating. */
-case class NearestCentroid(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "nearest_centroid"
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType), ArrayType(LongType))
-
-  override protected def nullSafeEval(qv: Any, ks: Any, cqs: Any): Any =
-    NearestCentroid.compute(
-      qv.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      ks.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      cqs.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (q, k, c) =>
-      s"${ev.value} = graft.expr.NearestCentroid.compute($q, $k, $c);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): NearestCentroid =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object NearestCentroid {
   // The LUT columns arrive from the SAME broadcast row for every stream
   // row of a task, but the generated accessor allocates a fresh
@@ -1025,7 +754,10 @@ object NearestCentroid {
       c.cqs(0) == u.getLong(0) &&
       c.cqs(c.cqs.length - 1) == u.getLong(c.cqs.length - 1)
 
-  private def luts(ksA: org.apache.spark.sql.catalyst.util.ArrayData,
+  /** Cached primitive-array view of the (ks, cqs) LUT columns — shared
+    * with [[NearestCentroidMin]] so both argmin forms pay the conversion
+    * once per (task, broadcast). */
+  private[expr] def luts(ksA: org.apache.spark.sql.catalyst.util.ArrayData,
       cqsA: org.apache.spark.sql.catalyst.util.ArrayData): Lut = (ksA, cqsA) match {
     case (ku: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData,
           u: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData) =>
@@ -1052,12 +784,6 @@ object NearestCentroid {
       new Lut(null, 0L, null, 0L, ksA.toLongArray(), cqsA.toLongArray())
   }
 
-  /** Cached primitive-array view of the (ks, cqs) LUT columns — shared
-    * with [[NearestCentroidMin]] so both argmin forms pay the conversion
-    * once per (task, broadcast). */
-  private[expr] def lutFor(ksA: org.apache.spark.sql.catalyst.util.ArrayData,
-      cqsA: org.apache.spark.sql.catalyst.util.ArrayData): Lut = luts(ksA, cqsA)
-
   def compute(qvA: org.apache.spark.sql.catalyst.util.ArrayData,
       ksA: org.apache.spark.sql.catalyst.util.ArrayData,
       cqsA: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
@@ -1069,13 +795,18 @@ object NearestCentroid {
     * above and by the STREAMING ingest face (StreamingMl.streamingIvfIngest),
     * so stream-side cell assignment is the same code as the batch plan's. */
   def computeArrays(qv: Array[Long], ks: Array[Long],
-      cqs: Array[Long]): Long = {
+      cqs: Array[Long]): Long = argmin("nearest_centroid", qv, ks, cqs)._2
+
+  /** `(bestD, bestK)`: the exact squared-L2 distance to the nearest
+    * centroid and its id, strict `<` so ties keep the lowest-indexed
+    * (ascending-id) centroid. `fn` prefixes the error messages. */
+  private[expr] def argmin(fn: String, qv: Array[Long], ks: Array[Long],
+      cqs: Array[Long]): (Long, Long) = {
     val k = ks.length
     val d = qv.length
-    if (k <= 0) throw new IllegalArgumentException(
-      "nearest_centroid: empty seed set")
+    if (k <= 0) throw new IllegalArgumentException(s"$fn: empty seed set")
     if (cqs.length != k * d) throw new IllegalArgumentException(
-      s"nearest_centroid: vector dim $d != centroid dim ${cqs.length / k}")
+      s"$fn: vector dim $d != centroid dim ${cqs.length / k}")
     var bestK = ks(0)
     var bestD = Long.MaxValue
     var i = 0
@@ -1090,7 +821,7 @@ object NearestCentroid {
       i += 1
       off += d
     }
-    bestK
+    (bestD, bestK)
   }
 }
 
@@ -1103,62 +834,29 @@ object NearestCentroid {
   * `SemDedup.assignChunked` EXACT: min over the union of chunks = min
   * over the full seed set. Same LUT cache, same strict-`<` in-chunk
   * tie rule. */
-case class NearestCentroidMin(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "nearest_min"
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType), ArrayType(LongType))
-
-  override protected def nullSafeEval(qv: Any, ks: Any, cqs: Any): Any =
-    NearestCentroidMin.compute(
-      qv.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      ks.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      cqs.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (q, k, c) =>
-      s"${ev.value} = graft.expr.NearestCentroidMin.compute($q, $k, $c);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): NearestCentroidMin =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object NearestCentroidMin {
   def compute(qvA: org.apache.spark.sql.catalyst.util.ArrayData,
       ksA: org.apache.spark.sql.catalyst.util.ArrayData,
       cqsA: org.apache.spark.sql.catalyst.util.ArrayData)
       : org.apache.spark.sql.catalyst.util.ArrayData = {
-    val lut = NearestCentroid.lutFor(ksA, cqsA)
-    val qv = qvA.toLongArray()
-    val ks = lut.ks
-    val cqs = lut.cqs
-    val k = ks.length
-    val d = qv.length
-    if (k <= 0) throw new IllegalArgumentException(
-      "nearest_min: empty seed set")
-    if (cqs.length != k * d) throw new IllegalArgumentException(
-      s"nearest_min: vector dim $d != centroid dim ${cqs.length / k}")
-    var bestK = ks(0)
-    var bestD = Long.MaxValue
-    var i = 0
-    var off = 0
-    while (i < k) {
-      var acc = 0L
-      var j = 0
-      while (j < d) {
-        val t = qv(j) - cqs(off + j); acc += t * t; j += 1
-      }
-      if (acc < bestD) { bestD = acc; bestK = ks(i) }
-      i += 1
-      off += d
-    }
+    val lut = NearestCentroid.luts(ksA, cqsA)
+    val (bestD, bestK) =
+      NearestCentroid.argmin("nearest_min", qvA.toLongArray(), lut.ks, lut.cqs)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       Array(bestD, bestK))
   }
 }
 
+/** Per-document bigram fsum Σᵢ terms[cp(i)·128 + cp(i+1)] over adjacent
+  * character pairs — one codegen pass over the string against a
+  * 16 384-slot long LUT (the alphabet²-bounded bigram model, built once
+  * and broadcast as a one-row array). The declarative forms both lose:
+  * explode + join re-shuffles a corpus-chars-sized relation, and
+  * `aggregate(sequence…, element_at(map…))` walks an interpreted lambda
+  * with an O(|Σ|²) linear map probe per character. ASCII-only by
+  * contract (the corpus precondition DeterminismSpec asserts); a
+  * code point ≥ 128 throws rather than silently diverging from the
+  * substr-based oracle. */
 object BigramFsum {
   def compute(s: String, terms: org.apache.spark.sql.catalyst.util.ArrayData)
       : Long = {
@@ -1335,134 +1033,125 @@ case class ScatterMoments(
 }
 
 object GraftFunctions {
-  private val fns: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("sinc"),
-      new ExpressionInfo(classOf[Sinc].getName, "sinc"),
-      (args: Seq[Expression]) => Sinc(Cast(args.head, DoubleType))),
-    (FunctionIdentifier("kahan_sum"),
-      new ExpressionInfo(classOf[KahanSum].getName, "kahan_sum"),
-      (args: Seq[Expression]) => KahanSum(Cast(args.head, DoubleType)).toAggregateExpression()),
-    (FunctionIdentifier("lsh_code16"),
-      new ExpressionInfo(classOf[LshCode].getName, "lsh_code16"),
-      (args: Seq[Expression]) => LshCode(args.head, 16)),
-    (FunctionIdentifier("lsh_code"),
-      new ExpressionInfo(classOf[LshCode].getName, "lsh_code"),
-      (args: Seq[Expression]) => {
-        // clear analysis error instead of a ClassCast/NPE at eval time
-        require(args.length == 2 && args(1).foldable,
-          "lsh_code(vec, width) requires a literal integer width")
-        args(1).eval() match {
-          case n: Number => LshCode(args.head, n.intValue)
-          case other => throw new IllegalArgumentException(
-            s"lsh_code width must be a literal integer, got $other")
-        }
-      }),
-    (FunctionIdentifier("rime_source_sum"),
-      new ExpressionInfo(classOf[RimeSourceSum].getName, "rime_source_sum"),
-      (args: Seq[Expression]) => {
-        require(args.length == 6 && args(4).foldable && args(5).foldable,
-          "rime_source_sum(u, v, w, freq, modelArrayLit, sineLit)")
-        val model = args(4).eval().asInstanceOf[ArrayData]
-          .toDoubleArray.toIndexedSeq
-        val sine = args(5).eval().asInstanceOf[Boolean]
-        RimeSourceSum(args(0), args(1), args(2), args(3), model, sine)
-      }),
-    (FunctionIdentifier("chan_bin_avg"),
-      new ExpressionInfo(classOf[ChanBinAvg].getName, "chan_bin_avg"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5 && args(4).foldable,
-          "chan_bin_avg(vis, wspec, flag, w_row, binSizeLit)")
-        ChanBinAvg(args(0), args(1), args(2), args(3),
-          args(4).eval().asInstanceOf[Number].intValue)
-      }),
-    (FunctionIdentifier("rolling_fp"),
-      new ExpressionInfo(classOf[RollingFingerprint].getName, "rolling_fp"),
-      (args: Seq[Expression]) => RollingFingerprint(args.head)),
-    (FunctionIdentifier("bigram_fsum"),
-      new ExpressionInfo(classOf[BigramFsum].getName, "bigram_fsum"),
-      (args: Seq[Expression]) => BigramFsum(args.head, args(1))),
-    (FunctionIdentifier("simhash8"),
-      new ExpressionInfo(classOf[SimHash8].getName, "simhash8"),
-      (args: Seq[Expression]) => SimHash8(args.head)),
-    (FunctionIdentifier("gopher_stats"),
-      new ExpressionInfo(classOf[GopherStats].getName, "gopher_stats"),
-      (args: Seq[Expression]) => GopherStats(args.head)),
-    (FunctionIdentifier("minhash4"),
-      new ExpressionInfo(classOf[MinHash4].getName, "minhash4"),
-      (args: Seq[Expression]) => MinHash4(args.head)),
-    (FunctionIdentifier("substr_count"),
-      new ExpressionInfo(classOf[SubstrCount].getName, "substr_count"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2 && args(1).foldable,
-          "substr_count(text, patternLit) requires a literal pattern")
-        SubstrCount(args.head, args(1))
-      }),
-    (FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
-      (args: Seq[Expression]) => WinnowFps(args.head)),
-    (FunctionIdentifier("char_grams"),
-      new ExpressionInfo(classOf[CharGrams].getName, "char_grams"),
-      (args: Seq[Expression]) => CharGrams(args.head, args(1))),
-    (FunctionIdentifier("word_grams"),
-      new ExpressionInfo(classOf[WordGrams].getName, "word_grams"),
-      (args: Seq[Expression]) => WordGrams(args.head, args(1))),
-    (FunctionIdentifier("token_ct_in"),
-      new ExpressionInfo(classOf[TokenCtIn].getName, "token_ct_in"),
-      (args: Seq[Expression]) => TokenCtIn(args.head, args(1))),
-    (FunctionIdentifier("drop_prefixed"),
-      new ExpressionInfo(classOf[DropPrefixed].getName, "drop_prefixed"),
-      (args: Seq[Expression]) => {
+  /** One kernel-table row: the SQL name, the result type, the input
+    * types, the object whose one `compute` runs, and a registration-time
+    * check of the argument expressions. */
+  final case class Kernel(name: String, dataType: DataType,
+      inputTypes: Seq[DataType], impl: AnyRef,
+      check: Seq[Expression] => Unit = _ => ()) {
+    /** `impl`'s `compute`, resolved once per kernel. */
+    lazy val method: java.lang.reflect.Method =
+      impl.getClass.getMethods.filter(_.getName == "compute") match {
+        case Array(m) => m
+        case ms => throw new IllegalStateException(
+          s"kernel $name: ${ms.length} compute methods on ${impl.getClass.getName}")
+      }
+    lazy val stringArg: Array[Boolean] =
+      method.getParameterTypes.map(_ == classOf[String])
+    /** The class holding the object's static forwarders. */
+    def target: String = impl.getClass.getName.stripSuffix("$")
+  }
+
+  private val Longs = ArrayType(LongType)
+  private val LongsNN = ArrayType(LongType, containsNull = false)
+  private val StringsNN = ArrayType(StringType, containsNull = false)
+
+  /** Every [[KernelCall]] kernel. */
+  val kernels: Seq[Kernel] = Seq(
+    Kernel("rolling_fp", LongType, Seq(StringType), RollingFingerprint),
+    Kernel("simhash8", LongType, Seq(StringType), SimHash8),
+    Kernel("gopher_stats", LongsNN, Seq(StringType), GopherStats),
+    Kernel("substr_count", LongType, Seq(StringType, StringType), SubstrCount,
+      args => require(args(1).foldable,
+        "substr_count(text, patternLit) requires a literal pattern")),
+    Kernel("minhash4", StringsNN, Seq(StringType), MinHash4),
+    // a non-array<long> LUT would otherwise fail inside codegen
+    Kernel("bigram_fsum", LongType, Seq(StringType, Longs), BigramFsum),
+    Kernel("winnow_fps", ArrayType(StructType(Seq(
+      StructField("pos", LongType, nullable = false),
+      StructField("fp", LongType, nullable = false))), containsNull = false),
+      Seq(StringType), WinnowFps),
+    Kernel("char_grams", StringsNN, Seq(StringType, IntegerType), CharGrams),
+    Kernel("word_grams", StringsNN, Seq(ArrayType(StringType), IntegerType), WordGrams),
+    Kernel("token_ct_in", IntegerType, Seq(StringType, ArrayType(StringType)), TokenCtIn),
+    Kernel("drop_prefixed", StringType, Seq(StringType, StringType, StringType),
+      DropPrefixed, args => {
         // the bytewise scan is only UTF-8-safe for a 1-byte delimiter
-        require(args.length == 3 && args(1).foldable,
+        require(args(1).foldable,
           "drop_prefixed(text, delimLit, prefix) requires a literal delimiter")
         val d = args(1).eval()
           .asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
         require(d != null && d.numBytes() == 1,
           "drop_prefixed delimiter must be exactly one ASCII byte")
-        DropPrefixed(args(0), args(1), args(2))
       }),
-    (FunctionIdentifier("subword_sum"),
-      new ExpressionInfo(classOf[SubwordSum].getName, "subword_sum"),
-      (args: Seq[Expression]) => SubwordSum(args.head, args(1))),
-    (FunctionIdentifier("qquant"),
-      new ExpressionInfo(classOf[QQuant].getName, "qquant"),
-      (args: Seq[Expression]) => QQuant(args.head, args(1))),
-    (FunctionIdentifier("sq8"),
-      new ExpressionInfo(classOf[Sq8Quant].getName, "sq8"),
-      (args: Seq[Expression]) => Sq8Quant(args.head, args(1))),
-    (FunctionIdentifier("qdot"),
-      new ExpressionInfo(classOf[QDot].getName, "qdot"),
-      (args: Seq[Expression]) => QDot(args.head, args(1))),
-    (FunctionIdentifier("ql2"),
-      new ExpressionInfo(classOf[QL2].getName, "ql2"),
-      (args: Seq[Expression]) => QL2(args.head, args(1))),
-    (FunctionIdentifier("nearest_centroid"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "nearest_centroid"),
-      (args: Seq[Expression]) => NearestCentroid(args.head, args(1), args(2))),
-    (FunctionIdentifier("nearest_min"),
-      new ExpressionInfo(classOf[NearestCentroidMin].getName, "nearest_min"),
-      (args: Seq[Expression]) => NearestCentroidMin(args.head, args(1), args(2))),
-    (FunctionIdentifier("scatter_moments"),
-      new ExpressionInfo(classOf[ScatterMoments].getName, "scatter_moments"),
-      (args: Seq[Expression]) => ScatterMoments(args.head).toAggregateExpression()),
-    (FunctionIdentifier("kmv_minhash"),
-      new ExpressionInfo(classOf[KmvMinHashes].getName, "kmv_minhash"),
-      (args: Seq[Expression]) => KmvMinHashes(args.head,
-        args(1).eval().asInstanceOf[Number].intValue).toAggregateExpression()),
+    Kernel("subword_sum", LongType, Seq(ArrayType(StringType), IntegerType), SubwordSum),
+    Kernel("qquant", LongsNN, Seq(ArrayType(FloatType), DoubleType), QQuant),
+    Kernel("sq8", LongsNN, Seq(Longs, LongType), Sq8Quant),
+    Kernel("qdot", LongType, Seq(Longs, Longs), QDot),
+    Kernel("ql2", LongType, Seq(Longs, Longs), QL2),
+    Kernel("nearest_centroid", LongType, Seq(Longs, Longs, Longs), NearestCentroid),
+    Kernel("nearest_min", LongsNN, Seq(Longs, Longs, Longs), NearestCentroidMin))
+
+  private val kernelByName: Map[String, Kernel] = kernels.map(k => k.name -> k).toMap
+
+  def kernel(name: String): Kernel = kernelByName(name)
+
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  private val fns: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("sinc", classOf[Sinc])(args => Sinc(Cast(args.head, DoubleType))),
+    fn("kahan_sum", classOf[KahanSum])(args =>
+      KahanSum(Cast(args.head, DoubleType)).toAggregateExpression()),
+    fn("lsh_code16", classOf[LshCode])(args => LshCode(args.head, 16)),
+    fn("lsh_code", classOf[LshCode]) { args =>
+      // clear analysis error instead of a ClassCast/NPE at eval time
+      require(args.length == 2 && args(1).foldable,
+        "lsh_code(vec, width) requires a literal integer width")
+      args(1).eval() match {
+        case n: Number => LshCode(args.head, n.intValue)
+        case other => throw new IllegalArgumentException(
+          s"lsh_code width must be a literal integer, got $other")
+      }
+    },
+    fn("rime_source_sum", classOf[RimeSourceSum]) { args =>
+      require(args.length == 6 && args(4).foldable && args(5).foldable,
+        "rime_source_sum(u, v, w, freq, modelArrayLit, sineLit)")
+      val model = args(4).eval().asInstanceOf[ArrayData]
+        .toDoubleArray.toIndexedSeq
+      val sine = args(5).eval().asInstanceOf[Boolean]
+      RimeSourceSum(args(0), args(1), args(2), args(3), model, sine)
+    },
+    fn("chan_bin_avg", classOf[ChanBinAvg]) { args =>
+      require(args.length == 5 && args(4).foldable,
+        "chan_bin_avg(vis, wspec, flag, w_row, binSizeLit)")
+      ChanBinAvg(args(0), args(1), args(2), args(3),
+        args(4).eval().asInstanceOf[Number].intValue)
+    },
+    fn("scatter_moments", classOf[ScatterMoments])(args =>
+      ScatterMoments(args.head).toAggregateExpression()),
+    fn("kmv_minhash", classOf[KmvMinHashes])(args => KmvMinHashes(args.head,
+      args(1).eval().asInstanceOf[Number].intValue).toAggregateExpression()),
     // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
     // own runtime filters but keeps both OUT of the public registry;
     // surfacing them lets a query build a bloom sketch with one
     // distributed aggregate and probe it declaratively — the t19
     // decontamination prefilter.
-    (FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(
-        classOf[aggregate.BloomFilterAggregate].getName, "bloom_filter_agg"),
-      (args: Seq[Expression]) => new aggregate.BloomFilterAggregate(
+    fn("bloom_filter_agg", classOf[aggregate.BloomFilterAggregate])(args =>
+      new aggregate.BloomFilterAggregate(
         args.head, args(1), args(2)).toAggregateExpression()),
-    (FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName,
-        "bloom_might_contain"),
-      (args: Seq[Expression]) => BloomFilterMightContain(args.head, args(1))))
+    fn("bloom_might_contain", classOf[BloomFilterMightContain])(args =>
+      BloomFilterMightContain(args.head, args(1)))
+  ) ++ kernels.map(k => fn(k.name, classOf[KernelCall]) { args =>
+    require(args.length == k.inputTypes.length,
+      s"${k.name} takes ${k.inputTypes.length} argument(s), got ${args.length}")
+    k.check(args)
+    KernelCall(k.name, args)
+  })
+
+  /** The SQL names of every registered function. */
+  val names: Seq[String] = fns.map(_._1.funcName)
 
   def injectInto(ext: SparkSessionExtensions): Unit =
     fns.foreach(ext.injectFunction)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.graft.Blocks
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -59,7 +60,7 @@ object Bpe {
     * the registered query contract). `firstSym` is the codepoint of the
     * first merged symbol (round r merges to chr(firstSym + r − 1)); all
     * corpus codepoints must stay < alphabet or the pair scan throws (the
-    * BigramFsum corpus contract, unchanged from TextCombiner).
+    * `bigram_fsum` corpus contract, unchanged from TextCombiner).
     *
     * CACHE LIFETIME (round-14 ADVICE, documented contract): the returned
     * DataFrame is backed by the final persisted+localCheckpointed corpus
@@ -124,7 +125,7 @@ object Bpe {
           while (i < a.length) { a(i) += b(i); i += 1 }; a },
         depth = treeDepth(cur.getNumPartitions))
       // cur is materialized now — its predecessor can be released
-      if (prev != null) { prev.unpersist(blocking = false); prev = null }
+      if (prev != null) { Blocks.release(prev); prev = null }
       var bestCnt = 0L; var code = -1
       var i = 0
       while (i < counts.length) {
@@ -146,7 +147,7 @@ object Bpe {
     // the top of the next round, which never comes): one count job
     // materializes the final frame so the predecessor is safe to drop
     cur.count()
-    if (prev != null) prev.unpersist(blocking = false)
+    if (prev != null) Blocks.release(prev)
 
     val mtab = merges.toSeq.toDF("id", "val")
       .select(col("id"), col("val"), lit("").as("s"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.graft.Blocks
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -229,7 +230,7 @@ object Calibrate {
       spark.sparkContext.getPersistentRDDs.keySet.diff(persistedBefore)
     def releaseIn(): Unit =
       inRddIds.foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
-        .foreach(_.unpersist(blocking = false)))
+        .foreach(Blocks.release))
     // sub-threshold escalation (round 14): when the solution-interval
     // problem is this small, each distributed iteration is pure overhead,
     // and the reference itself solves per-chunk in-process
@@ -293,7 +294,7 @@ object Calibrate {
       // Same gather plan, same aggregation, same doubles — the grid just
       // lives one hop closer.
       var localRows: Array[Row] = ckptRdd.collect()
-      ckptRdd.unpersist(blocking = false)
+      Blocks.release(ckptRdd)
       val schema = grid0.schema
       while (it < maxIter && maxDelta > tol) {
         val phasesL = spark.createDataFrame(
@@ -326,7 +327,7 @@ object Calibrate {
         maxDelta = rdd
           .map(row => math.abs(row.getDouble(dIdx)))
           .fold(0.0)(math.max)
-        if (prevRdd != null) prevRdd.unpersist(blocking = false)
+        if (prevRdd != null) Blocks.release(prevRdd)
         prevRdd = ckptRdd
         ckptRdd = rdd
         phases = spark.createDataFrame(rdd, updated.schema).drop("d")

@@ -81,7 +81,7 @@ object ConnectedComponents {
       : (DataFrame, RDD[Row]) = {
     val rdd = df.rdd.localCheckpoint()
     rdd.count() // materialize NOW so both downstream reads hit the cache
-    prev.foreach(_.unpersist(blocking = false))
+    prev.foreach(org.apache.spark.graft.Blocks.release)
     (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
   }
 

@@ -45,7 +45,7 @@ object SemDedup {
     * ONCE, flattened to two long arrays (ids ascending + row-major
     * centroid matrix), and shipped as a ONE-ROW broadcast-joined frame —
     * never into a literal expression, so the generated code is
-    * k-independent (the BigramFsum LUT idiom). Input must carry `qv`;
+    * k-independent (the `bigram_fsum` LUT idiom). Input must carry `qv`;
     * all other columns are preserved and an assignment column `k` is
     * appended. The argmin itself is the codegen'd `nearest_centroid`
     * expression: the whole assignment stays inside WholeStageCodegen on

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Counts are exact integers with the same totals as the explode plan,
   * so every oracle stays bit-identical. Non-ASCII input throws (the
-  * BigramFsum corpus contract) rather than silently mis-bucketing.
+  * `bigram_fsum` corpus contract) rather than silently mis-bucketing.
   */
 object TextCombiner {
 

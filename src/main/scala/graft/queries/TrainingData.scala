@@ -594,7 +594,7 @@ object TrainingData {
          |FROM votes""".stripMargin) { (s, dir) =>
       // a document's tokens all live in its own row, so the distinct-token
       // vote is a zero-shuffle projection: one codegen pass per document
-      // (expr/GraftExpressions.SimHash8). The earlier declarative form
+      // (the `simhash8` kernel). The earlier declarative form
       // shuffled the corpus-tokens relation twice (global (doc, tok)
       // distinct + vote re-group) and walked an interpreted
       // aggregate(sequence…) lambda per token.
@@ -2425,7 +2425,7 @@ object TrainingData {
       // shuffle, no per-occurrence rows anywhere); unigrams derive from
       // the TINY bg table. Scoring pass: the per-pair fsum term
       // round(ln·1e6) folds into ONE broadcast long[16384] and each doc
-      // scores in a single codegen'd BigramFsum pass over its bytes —
+      // scores in a single codegen'd `bigram_fsum` pass over its bytes —
       // zero extra rows, no interpreted lambda, no map probe. The
       // per-occurrence terms are identical to the old (doc, pair)-rollup
       // plan, so the hashed surface is bit-identical.
@@ -2982,7 +2982,7 @@ object TrainingData {
     //    both models come from the alphabet²-bounded per-partition LUT
     //    combiner, fold into ONE broadcast long[16384] of fixed-point
     //    ln-ratio terms, and each doc scores in a single codegen
-    //    BigramFsum pass — zero per-occurrence rows at any corpus size.
+    //    `bigram_fsum` pass — zero per-occurrence rows at any corpus size.
     //    Determinism: both smoothed probabilities are IEEE quotients of
     //    exact integers (bit-identical), ln of the bit-identical ratio is
     //    the t22 class with the same DeterminismSpec margin guard.
@@ -3229,7 +3229,7 @@ object TrainingData {
     //    doc under a corpus LM, split each language into head/middle/tail
     //    terciles by per-char perplexity). The LM is t22's char-bigram
     //    model via the alphabet²-bounded LUT combiner + one codegen
-    //    BigramFsum pass; the hashed surface is the exact micro-ln LONG
+    //    `bigram_fsum` pass; the hashed surface is the exact micro-ln LONG
     //    score, its exact-rational per-pair mean (round of a bit-identical
     //    IEEE quotient — class (a)), and an integer-ordered ntile. The
     //    tercile window is one lang-keyed shuffle of doc-sized rows.
